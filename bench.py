@@ -92,7 +92,6 @@ HEADLINE = [
     "index_stats",
     "aknn_search_api",
     "aknn_model_registry",
-    "aknn_http_search",
     "aknn_http_search_store",
     "aknn_http_upsert",
     "aknn_http_delete",

@@ -37,7 +37,6 @@ _QUERIES: dict[str, QueryFn] = {
     "aknn_http_upsert": server.aknn_http_upsert,
     "aknn_http_delete": server.aknn_http_delete,
     "aknn_http_bulk_ingest": server.aknn_http_bulk_ingest,
-    "aknn_http_search": server.aknn_http_search,
     "aknn_http_doc_get": server.aknn_http_doc_get,
     "streaming_index_compact": ingest.streaming_index_compact,
     # (2) store maintenance + persisted-store searches — index_store.py
@@ -93,13 +92,15 @@ _QUERIES: dict[str, QueryFn] = {
     "knn_graph_multiprobe": graph.knn_graph_multiprobe,
     "bm25_doc_search": search.bm25_doc_search,
     "hybrid_search_rrf": search.hybrid_search_rrf,
+    # promoted from the head of the rotation queue when the flat-layout
+    # serving key aknn_http_search was removed:
+    "source_stats": analytics.source_stats,
     # ---- GATE WINDOW BOUNDARY: the driver gates EXACTLY the first 50
     # entries (measured r3-r13: each CORRECTNESS json holds 50 keys). Keep
     # new/changed keys ABOVE this line and push an equal number below;
     # tests/test_gate_window.py enforces the placement.
     # -- r15 rotation queue, stalest latest-green first (within a tier,
     # prior order). Promote any key whose code changes mid-round. --
-    "source_stats": analytics.source_stats,
     "streaming_sessionize_check": ingest.streaming_sessionize_check,
     "streaming_sessionize_append": ingest.streaming_sessionize_append,
     "streaming_sessionize": ingest.streaming_sessionize,
@@ -325,9 +326,8 @@ _ORACLES: dict[str, Callable[[str], str]] = {
     "graph_delete": oracles_vector.graph_delete,
     "graph_rebuild": oracles_vector.graph_rebuild,
     "ivfpq_upsert": oracles_vector.ivfpq_upsert,
-    # the HTTP wire round-trip is bit-identical to the in-memory search
-    "aknn_http_search": oracles_vector.ann_search_lsh,
-    # ... and so is the partition-pruned store-backed serving mode
+    # the HTTP wire round-trip over the partition-pruned store is
+    # bit-identical to the in-memory search
     "aknn_http_search_store": oracles_vector.ann_search_lsh,
     # wire replace-on-index ≡ a full rebuild on the updated table — the
     # same contract (and oracle) as the batch index_upsert

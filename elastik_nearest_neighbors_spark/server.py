@@ -33,8 +33,8 @@ parameter names and document field names, using only the Python stdlib
   DELETE /{index}/{id} (r12) → remove one stored document (200
       "deleted" / 404 "not_found" — ES delete-by-id parity); bulk form
       POST /_aknn_delete {"_index": ..., "ids": [...]} → {"deleted": n}.
-      Store mode patches only the doomed ids' term/docs directories
-      (knn.index_delete's pruned-dynamic-overwrite pattern).
+      A delete is a replace with no new rows: it patches only the doomed
+      ids' term/docs directories.
 
   DELETE /{index} (r12) → drop the whole index (ES delete-index), and
       the recovery path for a torn index (see below).
@@ -50,35 +50,34 @@ parameter names and document field names, using only the Python stdlib
       (measured on the 200k-vector step-up — BASELINE.md r12).
 
 Every mutation runs under a per-index dirty marker: parquet has no
-transaction log, so a crash mid-commit could leave a half-overwritten
-flat dir or mutually-inconsistent docs/ and terms/ — the marker turns
-that into a DETECTED state (search and further mutations answer 503
-TornIndexError; DELETE /{index} + re-index recovers) instead of silent
-recall loss.
+transaction log, so a crash mid-commit could leave mutually-inconsistent
+docs/ and terms/ — the marker turns that into a DETECTED state (search
+and further mutations answer 503 TornIndexError; DELETE /{index} +
+re-index recovers) instead of silent recall loss.
 
 Deployment shape: the server is a DRIVER-side facade — each request plans
 a Spark job over the parquet-backed index (candidate generation is the
-broadcast hash join; the corpus never shuffles per query). Two store
-layouts behind the SAME wire protocol, selected by a constructor flag
-(r10 verdict item 2 — previously the pruned mode was promised in prose
-only):
+broadcast hash join; the corpus never shuffles per query). Every index
+has ONE layout, the plugin's: each doc is stored next to its hash terms.
+`docs/` holds (_id, _aknn_vector, hashes) partitioned by id_bucket =
+pmod(xxhash64(_id), n), so a doc-by-id lookup prunes to ONE directory;
+`terms/` holds the exploded terms partitioned by (tbl, bucket =
+pmod(hash, n)) — exactly sources.index_store's LSH layout. A search
+touches ≤ T of the T·n_buckets term directories plus one docs directory;
+only the ≤ k1-candidate re-rank gather reads the docs table un-pruned
+(the same shape the gated batch ann_search_lsh_store pays).
+tests/test_server.py asserts the PartitionFilters in the served plan.
 
-- flat (default): one parquet dir per index; every search scans it.
-  Right for small indexes — zero layout overhead.
-- store_backed=True: the 100 TB layout. `/_aknn_index` appends the
-  hashed docs under `docs/` partitioned by id_bucket =
-  pmod(xxhash64(_id), n) (doc-by-id lookup prunes to ONE directory) and
-  the exploded terms under `terms/` partitioned by
-  (tbl, bucket = pmod(hash, n)) — exactly sources.index_store's layout,
-  read back through its load_lsh_partitions. A search touches ≤ T of
-  the T·n_buckets term directories plus one docs directory; only the
-  ≤ k1-candidate re-rank gather reads the docs table un-pruned (the
-  same shape the gated batch ann_search_lsh_store pays).
-  tests/test_server.py asserts the PartitionFilters in the served plan.
+Index, delete and refresh share ONE patch path (`_replace_store`): the
+doomed ids' stored rows and the new rows name the touched directories,
+and each side is rewritten once by a pruned dynamic overwrite. A batch
+that replaces nothing is a plain append; a corpus-sized refresh swaps in
+a clustered rewrite of both sides instead (`_replace_store_bulk`).
 
-Registry entries `aknn_http_search` (flat) and `aknn_http_search_store`
-(pruned) drive all three endpoints over a real localhost socket and gate
-the round-trip against the shared ann_search_lsh oracle.
+Registry entries `aknn_http_search_store`, `aknn_http_upsert`,
+`aknn_http_delete`, `aknn_http_bulk_ingest` and `aknn_http_doc_get` drive
+the endpoints over a real localhost socket and gate the round-trip
+against the shared oracles.
 """
 
 from __future__ import annotations
@@ -88,27 +87,77 @@ import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import constants
 from .api import (
     ID_FIELD,
     VECTOR_FIELD,
     AknnModelRegistry,
     aknn_index,
-    aknn_search,
 )
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
+from .sources.index_store import DEFAULT_HASH_BUCKETS
+
+# partition columns of the two sides of the one index layout
+DOCS_PARTS = ["id_bucket"]
+TERMS_PARTS = ["tbl", "bucket"]
 
 
-def _refresh_bulk_rows() -> int:
-    """Staged-row count above which /_aknn_refresh merges fully
-    distributed (constants.REFRESH_BULK_ROWS; ENN_REFRESH_BULK_ROWS lets
-    tests force the bulk path on a KB-sized staging)."""
-    from .constants import REFRESH_BULK_ROWS
+def _id_bucket(id_col: Column) -> Column:
+    return F.pmod(F.xxhash64(id_col), F.lit(DEFAULT_HASH_BUCKETS))
 
-    env = os.environ.get("ENN_REFRESH_BULK_ROWS")
-    return int(env) if env else REFRESH_BULK_ROWS
+
+def _term_cols(terms: DataFrame) -> DataFrame:
+    """terms/ rows in the stored column types."""
+    return terms.select(
+        "vec_id",
+        F.col("tbl").cast("int").alias("tbl"),
+        "hash",
+        F.col("bucket").cast("int").alias("bucket"),
+    )
+
+
+def _terms_of(hashed: DataFrame) -> DataFrame:
+    """The terms/ rows of hashed docs: one (vec_id, tbl, hash, bucket) row
+    per table."""
+    from .operators.lsh import explode_hashes
+
+    exploded = explode_hashes(hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id")
+    return _term_cols(
+        exploded.withColumn("bucket", F.pmod(F.col("hash"), F.lit(DEFAULT_HASH_BUCKETS)))
+    )
+
+
+def _dirs(rows: list) -> tuple[set, set]:
+    """(id_bucket dirs, (tbl, bucket) term dirs) that hold `rows`, each
+    row carrying its id_bucket and hashes."""
+    return (
+        {int(r.id_bucket) for r in rows},
+        {(t, int(h) % DEFAULT_HASH_BUCKETS) for r in rows for t, h in enumerate(r.hashes)},
+    )
+
+
+def _live_rows(
+    docs: DataFrame, terms: DataFrame, ids_df: DataFrame, hashed, hint
+) -> tuple[DataFrame, DataFrame]:
+    """Per side, the stored rows minus `ids_df`'s ids, ∪ the new
+    `hashed` rows (None: nothing new), in the stored column types.
+    `hint` marks the id set for the anti-joins (F.broadcast for a
+    request-sized batch)."""
+    live_docs = docs.join(hint(ids_df), ID_FIELD, "left_anti")
+    live_terms = _term_cols(terms).join(
+        hint(ids_df.select(F.col(ID_FIELD).alias("vec_id"))), "vec_id", "left_anti"
+    )
+    if hashed is not None:
+        live_docs = live_docs.unionByName(
+            hashed.withColumn(
+                "id_bucket", F.col("id_bucket").cast(dict(docs.dtypes)["id_bucket"])
+            )
+        )
+        live_terms = live_terms.unionByName(_terms_of(hashed))
+    return live_docs, live_terms
 
 
 class TornIndexError(RuntimeError):
@@ -119,7 +168,9 @@ class TornIndexError(RuntimeError):
 
 
 class AknnHttpServer:
-    """Three-endpoint EsAknn server over a SparkSession.
+    """Three-endpoint EsAknn server over a SparkSession. Every index is
+    served from the one partitioned store layout described in the module
+    docstring.
 
     Binds 127.0.0.1 on an ephemeral port (`.port` after construction);
     `start()` serves on a daemon thread, `stop()` shuts down cleanly.
@@ -128,29 +179,33 @@ class AknnHttpServer:
     driver behind a load balancer, each replica reading the same store).
     """
 
-    def __init__(self, spark: SparkSession, root: str, store_backed: bool = False):
+    def __init__(self, spark: SparkSession, root: str, store_backed: bool = True):
+        # the keyword survives only for callers written when a second
+        # (flat) layout existed; True is the one layout there is
+        if not store_backed:
+            raise ValueError(
+                "AknnHttpServer serves only the partitioned store layout; "
+                "store_backed=False is not supported"
+            )
         self.spark = spark
         self.root = root
-        self.store_backed = store_backed
         self.registry = AknnModelRegistry(os.path.join(root, "models"))
-        # per-index docs/terms DataFrames, invalidated on append: a
+        # per-index docs/terms DataFrames, invalidated on every mutation: a
         # DataFrame's FileIndex snapshots the directory listing, so reusing
         # one across searches skips the per-request re-list + footer read
-        # of the partitioned stores (measured ~2× per-search latency in
-        # store mode). Searches prune the SNAPSHOT via PartitionFilters —
-        # for a long-lived server this is the right 100 TB trade: one
-        # listing amortized over every request, versus load_lsh_partitions'
+        # of the partitioned stores (measured ~2× per-search latency).
+        # Searches prune the SNAPSHOT via PartitionFilters — for a
+        # long-lived server this is the right 100 TB trade: one listing
+        # amortized over every request, versus load_lsh_partitions'
         # per-call explicit-directory read, which is built for one-shot
-        # batch jobs. An append makes the snapshot stale, so index() drops
-        # the entries.
+        # batch jobs.
         self._docs_cache: dict[str, DataFrame] = {}
         self._terms_cache: dict[str, DataFrame] = {}
         # base path -> parquet schema for _pruned_dirs_df: a schema-less
         # read pays a one-task footer-inference Spark job per call, which
-        # on the msearch point-update path is pure driver latency (guide
-        # §5). Keyed by store base path; popped with the sibling caches on
-        # every mutation/drop, so a recreated index with a different
-        # mapping can never see a stale schema.
+        # on the point-update path is pure driver latency (guide §5).
+        # Invalidated with the sibling caches, so a recreated index with a
+        # different mapping can never see a stale schema.
         self._pruned_schema: dict[str, object] = {}
         # next batch_seq per index for refresh=false staging; a cache miss
         # re-derives it from the staged parquet (max+1), so staged batches
@@ -166,13 +221,14 @@ class AknnHttpServer:
         # staging pins from its first STAGED batch); cleared on refresh
         # (the live store takes over) and on drop_index
         self._staged_id_type: dict[str, str] = {}
-        # doc-by-id lookup cache (r12): a store-mode search is two Spark
-        # jobs — fetch the stored query doc, then rank its candidates; a
-        # repeated GET of the same doc (the ES hot-query reality) need not
-        # re-run the fetch. Invalidated per-index on every mutation,
-        # exactly like the snapshot caches; FIFO-capped so a scan over
-        # many distinct ids can't grow it unboundedly.
-        self._doc_cache: dict[tuple, list] = {}
+        # doc-by-id lookup cache (r12): a search is two Spark jobs — fetch
+        # the stored query doc, then rank its candidates; a repeated GET of
+        # the same doc (the ES hot-query reality) need not re-run the
+        # fetch. (index, id) -> stored row, or None for an id not stored.
+        # Invalidated per-index on every mutation, exactly like the
+        # snapshot caches; FIFO-capped so a scan over many distinct ids
+        # can't grow it unboundedly.
+        self._doc_cache: dict[tuple, object] = {}
         # indexes with a mutation in flight (all ops serialize under the
         # lock): their own dirty marker must not trip _check_clean when a
         # snapshot cache misses mid-mutation
@@ -195,9 +251,17 @@ class AknnHttpServer:
     def _index_path(self, index: str) -> str:
         import re
 
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", index):
+        # "." and ".." fit the name alphabet but name the indexes root and
+        # the server root: DELETE /.. would drop the model catalog too
+        if index in (".", "..") or not re.fullmatch(r"[A-Za-z0-9._-]+", index):
             raise ValueError(f"bad index name: {index!r}")
         return os.path.join(self.root, "indexes", index)
+
+    def _docs_path(self, index: str) -> str:
+        return os.path.join(self._index_path(index), "docs")
+
+    def _terms_path(self, index: str) -> str:
+        return os.path.join(self._index_path(index), "terms")
 
     def _docs_df(self, docs: list[dict]) -> DataFrame:
         rows = [(d[ID_FIELD], [float(x) for x in d["_source"][VECTOR_FIELD]]) for d in docs]
@@ -205,12 +269,6 @@ class AknnHttpServer:
         return self.spark.createDataFrame(
             rows, f"{ID_FIELD} {id_type}, {VECTOR_FIELD} array<double>"
         )
-
-    def _docs_path(self, index: str) -> str:
-        """Where the (_id, _aknn_vector, hashes) doc rows live for `index` —
-        the flat dir itself, or the store layout's docs/ side."""
-        path = self._index_path(index)
-        return os.path.join(path, "docs") if self.store_backed else path
 
     def _stored_id_type(self, index: str) -> str | None:
         """The _id dtype already persisted for this index, or None if the
@@ -271,6 +329,25 @@ class AknnHttpServer:
             f"batch has {batch} ids — re-index under a new index name"
         )
 
+    def _coerce_ids(self, id_type: str, raw_ids: list) -> list:
+        """Wire ids coerced to the pinned id type, the way the stored rows
+        carry them (a string-pinned index stores "5", not 5). An id that
+        cannot exist in the index — null, or non-numeric against a bigint
+        index — is dropped: it keeps the not-found contract (200 / zero
+        hits for a search, 404 for a GET or delete)."""
+        out = []
+        for i in raw_ids:
+            if i is None:
+                continue
+            if id_type == "string":
+                out.append(str(i))
+                continue
+            try:
+                out.append(int(i))
+            except (TypeError, ValueError):
+                pass
+        return out
+
     def create(self, body: dict) -> dict:
         name = body["_id"]
         nb_tables = int(body.get("nb_tables", LSH_TABLES))
@@ -291,8 +368,6 @@ class AknnHttpServer:
         }
 
     def index(self, body: dict) -> dict:
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
-
         with self._lock:
             model = self.registry.get(body["model"])
             name = body["_index"]
@@ -303,16 +378,9 @@ class AknnHttpServer:
             # rows are dropped in the SAME write that lands the new ones.
             posted = list({d[ID_FIELD]: d for d in body["docs"]}.values())
             docs = self._pin_id_type(name, self._docs_df(posted))
-            # hash + materialize BEFORE touching the store: a replace must
-            # not destroy the stored doc when the incoming one is invalid
-            # (wrong dimension etc. — the hash matmul fails HERE, with the
-            # store untouched and the dirty marker unset)
-            hashed = aknn_index(docs, model)
-            if self.store_backed:
-                hashed = hashed.withColumn(
-                    "id_bucket",
-                    F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(DEFAULT_HASH_BUCKETS)),
-                )
+            hashed = aknn_index(docs, model).withColumn(
+                "id_bucket", _id_bucket(F.col(ID_FIELD))
+            )
             if body.get("refresh", True) is False:
                 # bulk-load path: hash + ONE narrow staging append, no
                 # store jobs; /_aknn_refresh merges. No checkpoint needed —
@@ -324,26 +392,18 @@ class AknnHttpServer:
                     "_index": name,
                     "staged": len(body["docs"]),
                 }
+            # hash + materialize BEFORE touching the store: a replace must
+            # not destroy the stored doc when the incoming one is invalid
+            # (wrong dimension etc. — the hash matmul fails HERE, with the
+            # store untouched and the dirty marker unset)
             hashed = hashed.localCheckpoint(eager=True)
-            ids = [d[ID_FIELD] for d in posted]
-            if dict(docs.dtypes)[ID_FIELD] == "string":
-                # _pin_id_type may have cast an int batch onto a string-
-                # pinned index; mirror that cast on the raw posted ids
-                ids = [str(i) for i in ids]
-            self._mutate(
-                name,
-                self._replace_store if self.store_backed else self._replace_flat,
-                name,
-                ids,
-                hashed,
-            )
+            self._mutate(name, self._replace_store, name, hashed)
         return {"acknowledged": True, "_index": body["_index"], "indexed": len(body["docs"])}
 
     # ---- torn-write detection (ADVICE r11): parquet has no transaction
-    # log, so a crash mid-mutation can leave a half-overwritten flat dir or
-    # mutually-inconsistent docs/ and terms/. Every mutation runs under a
-    # marker; a surviving marker turns silent recall loss into a refused,
-    # diagnosable state. ----
+    # log, so a crash mid-mutation can leave mutually-inconsistent docs/
+    # and terms/. Every mutation runs under a marker; a surviving marker
+    # turns silent recall loss into a refused, diagnosable state. ----
 
     def _dirty_marker(self, index: str) -> str:
         # '#' is outside the legal index-name alphabet (_index_path), so
@@ -365,10 +425,10 @@ class AknnHttpServer:
     def _mutate(self, index: str, fn, *args):
         """Run a store mutation under the torn-write marker: set it, run,
         clear it only on success. The marker sits OUTSIDE the data dir (a
-        flat-mode overwrite deletes the whole index dir first — a marker
-        inside it would vanish with the files it guards). Snapshot caches
-        are dropped in all cases: a failure after files were rewritten
-        must not leave them pointing at deleted parquet."""
+        drop deletes the whole index dir — a marker inside it would vanish
+        with the files it guards). Snapshot caches are dropped in all
+        cases: a failure after files were rewritten must not leave them
+        pointing at deleted parquet."""
         from . import io
 
         self._check_clean(index)
@@ -379,14 +439,19 @@ class AknnHttpServer:
             out = fn(*args)
         finally:
             self._mutating.discard(index)
-            self._docs_cache.pop(index, None)
-            self._terms_cache.pop(index, None)
-            for k in [k for k in self._pruned_schema if self._index_path(index) in k]:
-                del self._pruned_schema[k]
-            for k in [k for k in self._doc_cache if k[0] == index]:
-                del self._doc_cache[k]
+            self._invalidate(index)
         io.fs_delete(self.spark, marker)
         return out
+
+    def _invalidate(self, index: str) -> None:
+        """Drop every cache that points at the index's files: a mutation
+        rewrote them, or a drop removed them."""
+        self._docs_cache.pop(index, None)
+        self._terms_cache.pop(index, None)
+        self._pruned_schema.pop(self._docs_path(index), None)
+        self._pruned_schema.pop(self._terms_path(index), None)
+        for k in [k for k in self._doc_cache if k[0] == index]:
+            del self._doc_cache[k]
 
     def _ids_df(self, ids: list, id_type: str) -> DataFrame:
         return self.spark.createDataFrame([(i,) for i in ids], f"{ID_FIELD} {id_type}")
@@ -420,225 +485,123 @@ class AknnHttpServer:
             self._pruned_schema[base] = df.schema
         return df
 
-    def _replace_flat(self, index: str, ids: list, hashed: DataFrame) -> None:
-        """Flat-mode replace-on-index, FUSED (r12): one overwrite writes
-        survivors ∪ new batch, so the stored doc has no absent window
-        between a purge and an append (r11 purged then appended — two
-        writes and a crash between them lost the old doc for good; now a
-        crash leaves either the old dir or a detected-dirty one). An
-        all-new batch stays a plain append."""
-        path = self._index_path(index)
-        if self._stored_id_type(index) is None:
-            hashed.write.mode("append").parquet(path)
-            return
-        ids_df = self._ids_df(ids, dict(hashed.dtypes)[ID_FIELD])
-        existing = self._cached_docs(index)
-        doomed = existing.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-        if not doomed.limit(1).count():
-            hashed.write.mode("append").parquet(path)
-            return
-        patched = (
-            existing.join(F.broadcast(ids_df), ID_FIELD, "left_anti")
-            .unionByName(hashed)
-            .localCheckpoint()
-        )
-        patched.write.mode("overwrite").parquet(path)
+    def _replace_store(self, index: str, hashed: DataFrame | None, ids: list | None = None) -> int:
+        """The one patch path: replace-on-index of the `hashed` batch's
+        ids, or with hashed=None a delete of `ids` — a replace with no new
+        rows. Returns the number of stored docs removed.
 
-    def _replace_store(self, index: str, ids: list, hashed: DataFrame) -> None:
-        """Store-mode replace-on-index, FUSED purge+append (r12): each
-        side (terms/, docs/) transitions old→new in ONE pruned dynamic
-        overwrite carrying survivors ∪ new rows, instead of r11's purge
-        overwrite followed by an append — fewer Spark jobs per request
-        (the serving keys' cost is per-request driver overhead, r11
-        verdict) and no window where a replaced doc is absent. Bounds
-        unchanged: ≤ |batch| id_bucket docs dirs, ≤ |batch|·T (tbl,
-        bucket) term dirs (old ∪ new hashes), everything else untouched."""
-        from .operators.lsh import explode_hashes
-        from .sources.index_store import (
-            DEFAULT_HASH_BUCKETS,
-            partition_key_filter,
-            pruned_dynamic_overwrite,
-        )
+        The doomed ids' stored rows (their id_buckets and stored hashes)
+        and the new rows name the touched directories; each side
+        transitions old→new in ONE pruned dynamic overwrite carrying
+        survivors ∪ new rows (r12: no window where a replaced doc is
+        absent, nothing outside the touched set rewritten). A touched
+        directory can empty only if it held doomed rows and gets no new
+        ones, so the emptied-directory sweep runs unless doomed ⊆ new. A
+        batch that replaces nothing is a plain append."""
+        from .sources import index_store
 
-        n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
-        if self._stored_id_type(index) is None:
-            self._append_store(index, hashed)
-            return
-        # ONE collect over the checkpointed batch gives the pruning all it
-        # needs driver-side: the ids' docs buckets and the NEW hashes'
-        # term directories (≤ |batch|·T ints — no vectors)
-        brows = hashed.select("id_bucket", "hashes").collect()
-        buckets = sorted({int(r.id_bucket) for r in brows})
-        new_parts = {(t, int(h) % n) for r in brows for t, h in enumerate(r.hashes)}
-        ids_df = self._ids_df(ids, dict(hashed.dtypes)[ID_FIELD])
-        # r12: the batch's ids can only live in its own id_bucket dirs —
-        # read exactly those via explicit paths (no store-wide listing;
-        # see _pruned_dirs_df)
-        pruned = self._pruned_dirs_df(
-            os.path.join(path, "docs"), ["id_bucket"], buckets
-        )
-        if pruned is None:
-            self._append_store(index, hashed)
-            return
-        # the overlap probe doubles as doomed-terms discovery: the stored
-        # hashes of the replaced ids name the term dirs to patch (fused
-        # from r11's three jobs — doomed checkpoint, limit-count, parts
-        # collect)
-        doomed_rows = (
-            pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-            .select("hashes")
-            .collect()
-        )
-        if not doomed_rows:
-            self._append_store(index, hashed)
-            return
-        doomed_parts = {
-            (t, int(h) % n) for r in doomed_rows for t, h in enumerate(r.hashes)
-        }
-        touched = sorted(doomed_parts | new_parts)
-        # terms side: survivors of EVERY touched dir ∪ the new batch's
-        # terms — a new-only dir must fold its existing rows in too, or
-        # the dynamic overwrite would drop them. Explicit-dir read of the
-        # touched dirs only (the partition_key_filter predicate stays on
-        # top as the correctness guard, same as load_lsh_partitions).
-        terms = self._pruned_dirs_df(os.path.join(path, "terms"), ["tbl", "bucket"], touched)
-        new_terms = explode_hashes(
-            hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod(F.col("hash"), F.lit(n)).cast("int").alias("bucket"),
-        )
-        live_terms = new_terms
-        if terms is not None:
-            live_terms = (
-                terms.where(partition_key_filter(["tbl", "bucket"], touched))
-                .select(
-                    "vec_id",
-                    F.col("tbl").cast("int").alias("tbl"),
-                    "hash",
-                    F.col("bucket").cast("int").alias("bucket"),
+        doomed: list = []
+        id_type = self._stored_id_type(index)
+        if id_type is not None:
+            # the ids can only live in their own id_bucket dirs: a replace
+            # knows them from the new rows, a delete hashes its ids
+            if hashed is None:
+                new = []
+                ids_df = self._ids_df(ids, id_type)
+                probe = {int(r[0]) for r in ids_df.select(_id_bucket(F.col(ID_FIELD))).collect()}
+            else:
+                new = hashed.select(ID_FIELD, "id_bucket", "hashes").collect()
+                ids_df = self._ids_df([r[ID_FIELD] for r in new], id_type)
+                probe = _dirs(new)[0]
+            new_buckets, new_parts = _dirs(new)
+            # explicit-path read of exactly those dirs — no store-wide
+            # listing, see _pruned_dirs_df
+            pruned = self._pruned_dirs_df(self._docs_path(index), DOCS_PARTS, probe)
+            if pruned is not None:
+                doomed = (
+                    pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
+                    .select("id_bucket", "hashes")
+                    .collect()
                 )
-                .join(
-                    F.broadcast(ids_df.select(F.col(ID_FIELD).alias("vec_id"))),
-                    "vec_id",
-                    "left_anti",
-                )
-                .unionByName(new_terms)
-            )
-        # a doomed-only term dir (old hash no new doc shares) can empty, so
-        # the emptied-dir sweep stays ON unless the new parts cover it
-        pruned_dynamic_overwrite(
+        if not doomed:
+            if hashed is not None:
+                self._append_store(index, hashed)
+            return 0
+        doomed_buckets, doomed_parts = _dirs(doomed)
+        buckets = sorted(doomed_buckets | new_buckets)
+        parts = sorted(doomed_parts | new_parts)
+        # a doomed doc's term dirs exist, so the terms read is never None
+        terms = self._pruned_dirs_df(self._terms_path(index), TERMS_PARTS, parts)
+        live_docs, live_terms = _live_rows(
+            pruned.where(index_store.partition_key_filter(DOCS_PARTS, buckets)),
+            terms.where(index_store.partition_key_filter(TERMS_PARTS, parts)),
+            ids_df,
+            hashed,
+            F.broadcast,
+        )
+        index_store.pruned_dynamic_overwrite(
             self.spark,
-            os.path.join(path, "terms"),
+            self._terms_path(index),
             live_terms,
-            ["tbl", "bucket"],
-            touched,
+            TERMS_PARTS,
+            parts,
             assume_live=doomed_parts <= new_parts,
         )
-        # docs side: the new rows land in exactly the probed buckets
-        # (id_bucket is a function of _id), so one overwrite covers purge
-        # and append, no touched directory can empty (assume_live), and
-        # the emptied-dir job is skipped
-        live_docs = pruned.join(F.broadcast(ids_df), ID_FIELD, "left_anti").unionByName(
-            hashed.withColumn(
-                "id_bucket", F.col("id_bucket").cast(dict(pruned.dtypes)["id_bucket"])
-            )
-        )
-        pruned_dynamic_overwrite(
+        index_store.pruned_dynamic_overwrite(
             self.spark,
-            os.path.join(path, "docs"),
+            self._docs_path(index),
             live_docs,
-            ["id_bucket"],
+            DOCS_PARTS,
             buckets,
-            assume_live=True,
+            assume_live=doomed_buckets <= new_buckets,
         )
-
-    def _replace_flat_bulk(self, index: str, latest: DataFrame) -> None:
-        """Flat-mode whole-corpus merge for bulk refreshes: survivors via
-        a distributed anti-join against the staged-id DATAFRAME (no
-        broadcast of an O(corpus) id set), one overwrite."""
-        path = self._index_path(index)
-        if self._stored_id_type(index) is None:
-            latest.write.mode("overwrite").parquet(path)
-            return
-        ids_df = latest.select(ID_FIELD)
-        patched = (
-            self._cached_docs(index)
-            .join(ids_df, ID_FIELD, "left_anti")
-            .unionByName(latest)
-            .localCheckpoint()
-        )
-        patched.write.mode("overwrite").parquet(path)
+        return len(doomed)
 
     def _replace_store_bulk(self, index: str, latest: DataFrame) -> None:
-        """Store-mode whole-store merge for bulk refreshes (r13, ADVICE
-        r12): when the staged batch is corpus-sized, per-id pruning is
-        pointless (it touches ~every directory anyway) and collecting the
-        staged ids/hashes driver-side is O(corpus) driver memory. Merge
-        fully distributed instead: survivors = live rows anti-joined
-        against the staged-id DataFrame, unioned with the staged rows,
-        clustered sibling-write + swap per side (docs/ by id_bucket,
-        terms/ by (tbl, bucket)) under the caller's torn-write marker.
-        Content is row-identical to the pruned patch path — the gated
-        drive asserts it by forcing the threshold down — and the swapped
-        store lands compacted (one file per directory) for free."""
-        from .operators.lsh import explode_hashes
-        from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered_overwrite_swap
+        """Whole-store merge for bulk refreshes (r13, ADVICE r12): when the
+        staged batch is corpus-sized, per-id pruning is pointless (it
+        touches ~every directory anyway) and collecting the staged
+        ids/hashes driver-side is O(corpus) driver memory. Merge fully
+        distributed instead: survivors = live rows anti-joined against the
+        staged-id DataFrame, unioned with the staged rows, clustered
+        sibling-write + swap per side under the caller's torn-write
+        marker. Content is row-identical to the pruned patch path — a test
+        asserts it by forcing the threshold down — and the swapped store
+        lands compacted (one file per directory) for free."""
+        from .sources.index_store import clustered_overwrite_swap
 
-        n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
-        new_terms = explode_hashes(
-            latest.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod(F.col("hash"), F.lit(n)).cast("int").alias("bucket"),
-        )
         if self._stored_id_type(index) is None:
-            live_docs, live_terms = latest, new_terms
+            live_docs, live_terms = latest, _terms_of(latest)
         else:
-            ids_df = latest.select(ID_FIELD)
-            existing = self._cached_docs(index)
-            live_docs = (
-                existing.join(ids_df, ID_FIELD, "left_anti")
-                .unionByName(
-                    latest.withColumn(
-                        "id_bucket",
-                        F.col("id_bucket").cast(dict(existing.dtypes)["id_bucket"]),
-                    )
-                )
+            live_docs, live_terms = _live_rows(
+                self._cached_docs(index),
+                self._cached_terms(index),
+                latest.select(ID_FIELD),
+                latest,
+                lambda df: df,
             )
-            live_terms = (
-                self._cached_terms(index)
-                .select(
-                    "vec_id",
-                    F.col("tbl").cast("int").alias("tbl"),
-                    "hash",
-                    F.col("bucket").cast("int").alias("bucket"),
-                )
-                .join(
-                    ids_df.select(F.col(ID_FIELD).alias("vec_id")),
-                    "vec_id",
-                    "left_anti",
-                )
-                .unionByName(new_terms)
-            )
-        clustered_overwrite_swap(
-            self.spark, os.path.join(path, "docs"), live_docs, ["id_bucket"]
-        )
-        clustered_overwrite_swap(
-            self.spark, os.path.join(path, "terms"), live_terms, ["tbl", "bucket"]
-        )
+        clustered_overwrite_swap(self.spark, self._docs_path(index), live_docs, DOCS_PARTS)
+        clustered_overwrite_swap(self.spark, self._terms_path(index), live_terms, TERMS_PARTS)
+
+    def _append_store(self, index: str, hashed: DataFrame) -> None:
+        """Append one all-new batch: docs/ by id_bucket, terms/ by
+        (tbl, bucket) — sources.index_store's exact LSH layout (id column
+        stored under its vec_id name so load_lsh_partitions reads it back
+        verbatim). Per-batch appends accumulate one file per touched
+        directory per batch; POST /_aknn_compact rewrites them."""
+        from .sources.index_store import clustered
+
+        for path, df, cols in (
+            (self._docs_path(index), hashed, DOCS_PARTS),
+            (self._terms_path(index), _terms_of(hashed), TERMS_PARTS),
+        ):
+            clustered(df, *cols).write.mode("append").partitionBy(*cols).parquet(path)
 
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh
-    # — exactly ES's near-real-time contract. Staging lives OUTSIDE the
+    # — exactly ES's near-real-time contract. Staging lives beside the
     # data dir ('#' is outside the legal index-name alphabet, like the
-    # dirty marker) so flat-mode reads and overwrites never see it. ----
+    # dirty marker). ----
 
     def _staging_path(self, index: str) -> str:
         return os.path.join(self.root, "indexes", f"{index}#staging")
@@ -667,7 +630,9 @@ class AknnHttpServer:
         merge runs under the dirty marker like any mutation, and staging
         is deleted only after both sides commit, so a crash either leaves
         the staged batches intact (re-refresh) or a detected-torn index
-        (drop + re-index — drop_index clears staging too)."""
+        (drop + re-index — drop_index clears staging too). Above
+        constants.REFRESH_BULK_ROWS staged rows the merge never collects
+        them: distributed anti-join + clustered swap."""
         from . import io
         from pyspark.sql import Window
 
@@ -684,33 +649,20 @@ class AknnHttpServer:
                 .localCheckpoint(eager=True)
             )
             n_staged = latest.count()
-            if n_staged > _refresh_bulk_rows():
-                # corpus-sized merge (r13, ADVICE r12): never collect the
-                # staged ids — distributed anti-join + clustered swap
-                def _merge_bulk() -> None:
-                    (
-                        self._replace_store_bulk
-                        if self.store_backed
-                        else self._replace_flat_bulk
-                    )(index, latest)
-                    io.fs_delete(self.spark, path)
-
-                self._mutate(index, _merge_bulk)
-                self._staging_seq.pop(index, None)
-                self._staged_id_type.pop(index, None)
-                return {"_index": index, "refreshed": True, "merged": n_staged}
-            ids = [r[0] for r in latest.select(ID_FIELD).collect()]
+            merge = (
+                self._replace_store_bulk
+                if n_staged > constants.REFRESH_BULK_ROWS
+                else self._replace_store
+            )
 
             def _merge() -> None:
-                (self._replace_store if self.store_backed else self._replace_flat)(
-                    index, ids, latest
-                )
+                merge(index, latest)
                 io.fs_delete(self.spark, path)
 
             self._mutate(index, _merge)
             self._staging_seq.pop(index, None)
             self._staged_id_type.pop(index, None)
-            return {"_index": index, "refreshed": True, "merged": len(ids)}
+            return {"_index": index, "refreshed": True, "merged": n_staged}
 
     def compact(self, index: str) -> dict:
         """POST /_aknn_compact — rewrite the index's accumulated append
@@ -718,140 +670,35 @@ class AknnHttpServer:
         (r13, the r12 verdict's wire-compaction item: every append-mode
         mutation leaves one file per touched directory, and 40-50 files
         per directory was the measured cost floor of the upsert/delete
-        serving drives). Runs compact_in_place on docs/ (by id_bucket)
-        and terms/ (by (tbl, bucket)) under the torn-write marker; served
-        rows are unchanged — same content, same partition values, fewer
-        files — so the gated results are identical by construction. Flat
-        mode stores are a single overwrite layout already: acknowledged,
-        nothing to do."""
+        serving drives). Runs compact_in_place on both sides under the
+        torn-write marker; served rows are unchanged — same content, same
+        partition values, fewer files — so the gated results are
+        identical by construction."""
         from . import io
         from .sources.index_store import compact_in_place
 
         with self._lock:
             if not io.fs_isdir(self.spark, self._docs_path(index)):
                 raise ValueError(f"no such index: {index!r}")
-            if not self.store_backed:
-                return {"_index": index, "acknowledged": True, "compacted": False}
 
             def _run() -> None:
-                compact_in_place(self.spark, self._docs_path(index), ["id_bucket"])
-                compact_in_place(
-                    self.spark,
-                    os.path.join(self._index_path(index), "terms"),
-                    ["tbl", "bucket"],
-                )
+                compact_in_place(self.spark, self._docs_path(index), DOCS_PARTS)
+                compact_in_place(self.spark, self._terms_path(index), TERMS_PARTS)
 
             self._mutate(index, _run)
-            return {"_index": index, "acknowledged": True, "compacted": True}
+        return {"_index": index, "acknowledged": True, "compacted": True}
 
     def delete_ids(self, index: str, raw_ids: list) -> int:
-        """Bulk document delete — ES DELETE-parity (r11 verdict item 1):
-        the purge half of replace-on-index with no append, shared by the
-        single-doc DELETE /{index}/{id} endpoint and the bulk POST
-        /_aknn_delete. Ids are coerced to the index's pinned _id type (a
-        non-numeric id cannot exist in a bigint-pinned index — it counts
-        as not-found, like any unknown doc). Returns the number of stored
-        docs actually removed (0 → HTTP 404 at the wire)."""
+        """Bulk document delete — ES DELETE-parity (r11 verdict item 1),
+        shared by the single-doc DELETE /{index}/{id} endpoint and the
+        bulk POST /_aknn_delete. Returns the number of stored docs
+        actually removed (0 → HTTP 404 at the wire)."""
         with self._lock:
             pinned = self._stored_id_type(index)
-            if pinned is None:
-                return 0
-            ids = []
-            for i in raw_ids:
-                if pinned == "string":
-                    ids.append(str(i))
-                else:
-                    try:
-                        ids.append(int(i))
-                    except (TypeError, ValueError):
-                        pass
+            ids = [] if pinned is None else self._coerce_ids(pinned, raw_ids)
             if not ids:
                 return 0
-            return self._mutate(
-                index,
-                self._delete_store if self.store_backed else self._delete_flat,
-                index,
-                ids,
-                pinned,
-            )
-
-    def _delete_flat(self, index: str, ids: list, id_type: str) -> int:
-        existing = self._cached_docs(index)
-        ids_df = self._ids_df(ids, id_type)
-        n_doomed = existing.join(F.broadcast(ids_df), ID_FIELD, "left_semi").count()
-        if not n_doomed:
-            return 0
-        survivors = existing.join(
-            F.broadcast(ids_df), ID_FIELD, "left_anti"
-        ).localCheckpoint()
-        # deleting the last doc leaves a legal empty (schema-only) dir
-        survivors.write.mode("overwrite").parquet(self._index_path(index))
-        return n_doomed
-
-    def _delete_store(self, index: str, ids: list, id_type: str) -> int:
-        """knn.index_delete's pattern behind the wire: the doomed ids'
-        stored hashes name the term dirs, their id_buckets the docs dirs;
-        both sides are patched via pruned dynamic overwrite and a
-        directory emptied by the purge is removed (index_store helper)."""
-        from .sources.index_store import (
-            DEFAULT_HASH_BUCKETS,
-            partition_key_filter,
-            pruned_dynamic_overwrite,
-        )
-
-        n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
-        ids_df = self._ids_df(ids, id_type)
-        buckets = [
-            int(r.id_bucket)
-            for r in ids_df.select(
-                F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(n)).alias("id_bucket")
-            )
-            .distinct()
-            .collect()
-        ]
-        # explicit-dir reads throughout (r12, see _pruned_dirs_df): the
-        # doomed ids can only live in their own id_bucket dirs, and the
-        # doomed terms only in the stored hashes' (tbl, bucket) dirs
-        pruned = self._pruned_dirs_df(
-            os.path.join(path, "docs"), ["id_bucket"], buckets
-        )
-        if pruned is None:
-            return 0
-        doomed_rows = (
-            pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-            .select("hashes", "id_bucket")
-            .collect()
-        )
-        if not doomed_rows:
-            return 0
-        doomed_parts = sorted(
-            {(t, int(h) % n) for r in doomed_rows for t, h in enumerate(r.hashes)}
-        )
-        doomed_buckets = sorted({int(r.id_bucket) for r in doomed_rows})
-        terms = self._pruned_dirs_df(
-            os.path.join(path, "terms"), ["tbl", "bucket"], doomed_parts
-        )
-        if terms is not None:
-            live_terms = (
-                terms.where(partition_key_filter(["tbl", "bucket"], doomed_parts))
-                .select("vec_id", "tbl", "hash", "bucket")
-                .join(
-                    F.broadcast(ids_df.select(F.col(ID_FIELD).alias("vec_id"))),
-                    "vec_id",
-                    "left_anti",
-                )
-            )
-            pruned_dynamic_overwrite(
-                self.spark, os.path.join(path, "terms"), live_terms, ["tbl", "bucket"], doomed_parts
-            )
-        live_docs = pruned.where(F.col("id_bucket").isin(doomed_buckets)).join(
-            F.broadcast(ids_df), ID_FIELD, "left_anti"
-        )
-        pruned_dynamic_overwrite(
-            self.spark, os.path.join(path, "docs"), live_docs, ["id_bucket"], doomed_buckets
-        )
-        return len(doomed_rows)
+            return self._mutate(index, self._replace_store, index, None, ids)
 
     def drop_index(self, index: str) -> bool:
         """DELETE /{index} — ES's delete-index, and the documented recovery
@@ -862,49 +709,12 @@ class AknnHttpServer:
         with self._lock:
             path = self._index_path(index)
             existed = io.fs_isdir(self.spark, path)
-            io.fs_delete(self.spark, path)
-            io.fs_delete(self.spark, self._dirty_marker(index))
-            io.fs_delete(self.spark, self._staging_path(index))
-            self._staging_seq.pop(index, None)
-            self._staged_id_type.pop(index, None)
-            self._id_type_cache.pop(index, None)
-            self._docs_cache.pop(index, None)
-            self._terms_cache.pop(index, None)
-            for k in [k for k in self._pruned_schema if self._index_path(index) in k]:
-                del self._pruned_schema[k]
-            for k in [k for k in self._doc_cache if k[0] == index]:
-                del self._doc_cache[k]
+            for p in (path, self._dirty_marker(index), self._staging_path(index)):
+                io.fs_delete(self.spark, p)
+            for cache in (self._staging_seq, self._staged_id_type, self._id_type_cache):
+                cache.pop(index, None)
+            self._invalidate(index)
         return existed
-
-    def _append_store(self, index: str, hashed: DataFrame) -> None:
-        """Append one all-new /_aknn_index batch into the partition-pruned
-        layout: docs/ partitioned by id_bucket (doc-by-id lookup = one
-        directory), terms/ partitioned by (tbl, bucket) —
-        sources.index_store's exact LSH layout (id column stored under its
-        vec_id name so load_lsh_partitions reads it back verbatim).
-        `hashed` arrives with id_bucket already computed (index() adds it
-        before the checkpoint). Per-batch appends accumulate one file per
-        touched directory per batch — the compaction story is
-        streaming_index_compact's, unchanged."""
-        from .operators.lsh import explode_hashes
-        from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered
-
-        path = self._index_path(index)
-        (
-            clustered(hashed, "id_bucket")
-            .write.mode("append")
-            .partitionBy("id_bucket")
-            .parquet(os.path.join(path, "docs"))
-        )
-        terms = explode_hashes(
-            hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).withColumn("bucket", F.pmod(F.col("hash"), F.lit(DEFAULT_HASH_BUCKETS)))
-        (
-            clustered(terms, "tbl", "bucket")
-            .write.mode("append")
-            .partitionBy("tbl", "bucket")
-            .parquet(os.path.join(path, "terms"))
-        )
 
     def _cached_docs(self, index: str) -> DataFrame:
         df = self._docs_cache.get(index)
@@ -921,49 +731,49 @@ class AknnHttpServer:
         df = self._terms_cache.get(index)
         if df is None:
             self._check_clean(index)
-            df = self.spark.read.parquet(os.path.join(self._index_path(index), "terms"))
+            df = self.spark.read.parquet(self._terms_path(index))
             self._terms_cache[index] = df
         return df
 
-    def _query_doc_df(self, index: str, doc_id) -> DataFrame:
-        """The stored query doc, read from its SINGLE id_bucket directory:
-        xxhash64(lit) constant-folds, so the bucket predicate lands in the
-        scan's PartitionFilters (asserted by tests/test_server.py). The lit
-        is cast to the pinned id type — xxhash64 is type-sensitive, so an
-        int literal probing a bigint-written bucket column must hash as
-        bigint."""
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
-
+    def _query_docs_df(self, index: str, ids: list) -> DataFrame:
+        """The stored docs of `ids`, read from their id_bucket directories:
+        xxhash64(lit) constant-folds, so each id's bucket predicate lands
+        in the scan's PartitionFilters as a literal equality, OR-ed across
+        ids (asserted by tests/test_server.py). The lit is cast to the
+        pinned id type — xxhash64 is type-sensitive, so an int literal
+        probing a bigint-written bucket column must hash as bigint."""
         docs = self._cached_docs(index)
-        qlit = F.lit(doc_id).cast(dict(docs.dtypes)[ID_FIELD])
-        return docs.where(
-            (F.col("id_bucket") == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS)))
-            & (F.col(ID_FIELD) == qlit)
-        )
+        id_type = dict(docs.dtypes)[ID_FIELD]
+        pred = None
+        for d in ids:
+            q = F.lit(d).cast(id_type)
+            c = (F.col("id_bucket") == _id_bucket(q)) & (F.col(ID_FIELD) == q)
+            pred = c if pred is None else pred | c
+        return docs.where(pred)
 
-    def _coerce_ids(self, id_type: str, doc_ids: list) -> list:
-        """Wire ids coerced to the pinned id type; a non-numeric id probing
-        a bigint-pinned index cannot exist there — it keeps the 200 /
-        zero-hits contract and is simply dropped from the Spark-side
-        batch (the response builder emits its empty hit list)."""
-        if id_type != "bigint":
-            return list(doc_ids)
-        out = []
-        for d in doc_ids:
-            try:
-                out.append(int(d))
-            except ValueError:
-                continue
+    def _stored_docs(self, index: str, ids: list) -> dict:
+        """Coerced id -> stored doc row (None: not stored), through the
+        per-id doc cache; every cache miss shares ONE pruned read."""
+        out = {d: self._doc_cache[(index, d)] for d in ids if (index, d) in self._doc_cache}
+        missing = dict.fromkeys(d for d in ids if d not in out)
+        if missing:
+            for r in self._query_docs_df(index, list(missing)).collect():
+                missing[r[ID_FIELD]] = r
+            for d, r in missing.items():
+                if len(self._doc_cache) >= 4096:  # FIFO cap
+                    self._doc_cache.pop(next(iter(self._doc_cache)))
+                self._doc_cache[(index, d)] = r
+            out.update(missing)
         return out
 
-    def _msearch_store(self, index: str, doc_ids: list, k1: int, k2: int) -> DataFrame:
-        """The pruned serving read (store_backed mode) for a BATCH of query
-        ids, returned BEFORE the collect so tests can assert its physical
-        plan: the query docs come from their ≤ |batch| id_bucket
-        directories (xxhash64(lit) folds per id to a literal
-        PartitionFilter, OR-ed), candidates from the ≤ Q·T probed
-        (tbl, bucket) term directories of the cached terms snapshot; only
-        the ≤ Q·k1 re-rank vector gather touches docs/ un-pruned.
+    def _msearch_store(self, index: str, ids: list, k1: int, k2: int) -> DataFrame | None:
+        """The pruned serving read for a BATCH of coerced query ids,
+        returned BEFORE the collect so tests can assert its physical plan
+        (None when no id is stored): the query docs come from their
+        ≤ |batch| id_bucket directories (_query_docs_df), candidates from
+        the ≤ Q·T probed (tbl, bucket) term directories of the cached
+        terms snapshot; only the ≤ Q·k1 re-rank vector gather touches
+        docs/ un-pruned.
 
         r13 (the r12 verdict's job-count item): batching is where the
         per-request fixed driver cost goes away — Q queries share ONE
@@ -971,39 +781,13 @@ class AknnHttpServer:
         each, and per-query results are bit-identical to the single-id
         path because every rank window partitions by query_id."""
         from .operators.knn import rank_term_matches
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
+        from .sources.index_store import partition_key_filter
 
-        n = DEFAULT_HASH_BUCKETS
         docs = self._cached_docs(index)
         id_type = dict(docs.dtypes)[ID_FIELD]
-        empty = f"query_id {id_type}, neighbor_id {id_type}, n_match bigint, distance double"
-        ids = self._coerce_ids(id_type, doc_ids)
-        missing = [d for d in ids if (index, d) not in self._doc_cache]
-        if missing:
-            # ONE pruned read for every cache miss: OR of the single-id
-            # shape (id_bucket == folded-literal) & (id == literal), so
-            # partition pruning still sees only literal bucket equalities
-            pred = None
-            for d in missing:
-                qlit = F.lit(d).cast(id_type)
-                c = (
-                    F.col("id_bucket")
-                    == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS))
-                ) & (F.col(ID_FIELD) == qlit)
-                pred = c if pred is None else pred | c
-            got: dict = {d: [] for d in missing}
-            for r in docs.where(pred).collect():
-                got[r[ID_FIELD]].append(r)
-            for d in missing:
-                if len(self._doc_cache) >= 4096:  # FIFO cap
-                    self._doc_cache.pop(next(iter(self._doc_cache)))
-                self._doc_cache[(index, d)] = got[d]
-        found = [(d, self._doc_cache[(index, d)][0]) for d in ids if self._doc_cache[(index, d)]]
+        found = [(d, q) for d, q in self._stored_docs(index, ids).items() if q is not None]
         if not found:
-            # wire-protocol parity with flat mode: an unknown doc id is a
-            # 200 with zero hits there (aknn_search over an empty query
-            # set), so the pruned layout must not turn it into a 400
-            return self.spark.createDataFrame([], empty)
+            return None
         q_exp = self.spark.createDataFrame(
             [(d, t, int(h)) for d, q in found for t, h in enumerate(q["hashes"])],
             f"query_id {id_type}, tbl int, hash bigint",
@@ -1015,12 +799,9 @@ class AknnHttpServer:
         # buckets. (r13: was an OR-of-literals tree — building that
         # ~Q·T-way Column tree cost seconds of py4j round-trips per
         # msearch batch at T=16; packed IN is one expression.)
-        from .sources.index_store import partition_key_filter
-
-        pairs = sorted({(t, int(h) % n) for _d, q in found for t, h in enumerate(q["hashes"])})
         idx_exp = (
             self._cached_terms(index)
-            .where(partition_key_filter(["tbl", "bucket"], pairs))
+            .where(partition_key_filter(TERMS_PARTS, sorted(_dirs([q for _d, q in found])[1])))
             .select(F.col("vec_id").alias("neighbor_id"), "tbl", "hash")
         )
         counts = (
@@ -1037,32 +818,21 @@ class AknnHttpServer:
             counts, docs, query_df, k1, k2, ID_FIELD, VECTOR_FIELD
         )
 
-    def _search_store(self, index: str, doc_id, k1: int, k2: int) -> DataFrame:
-        """Single-id form of _msearch_store (kept as the plan-contract
-        surface tests/test_server.py asserts on)."""
-        return self._msearch_store(index, [doc_id], k1, k2)
-
     def msearch(self, index: str, doc_ids: list, k1: int = ANN_K1, k2: int = ANN_K2) -> dict:
         """Batched search — ES `_msearch` parity, JSON-body form: one
         response per requested id, in request order, each identical to the
         single-id GET's payload. Q queries cost ONE ranked-collect job
         (plus one batched stored-doc fetch on cache miss) instead of Q."""
         with self._lock:
-            rows = []
             id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-            if self.store_backed:
-                ranked = self._msearch_store(index, doc_ids, k1, k2)
-            else:
-                coerced = self._coerce_ids(id_type, doc_ids)
-                ranked = (
-                    aknn_search(self._cached_docs(index), coerced, k1, k2)
-                    if coerced
-                    else None
-                )
-            if ranked is not None:
-                rows = ranked.orderBy(
+            ranked = self._msearch_store(index, self._coerce_ids(id_type, doc_ids), k1, k2)
+            rows = (
+                []
+                if ranked is None
+                else ranked.orderBy(
                     F.asc("query_id"), F.asc("distance"), F.asc("neighbor_id")
                 ).collect()
+            )
         by_qid: dict = {}
         for r in rows:
             by_qid.setdefault(r.query_id, []).append(r)
@@ -1089,39 +859,22 @@ class AknnHttpServer:
 
     def get_doc(self, index: str, doc_id) -> dict | None:
         """ES GET /{index}/{id} parity (r13, #163): the stored document's
-        source vector, or None → the handler's 404. Store mode reads the
-        id's single pruned id_bucket directory through the same per-id
-        cache the serving path warms; flat mode filters the cached
-        snapshot. JSON round-trips the doubles exactly, so the wire doc
-        equals the stored doc bit-for-bit."""
+        source vector, or None → the handler's 404. Reads the id's single
+        pruned id_bucket directory through the same per-id cache the
+        serving path warms. JSON round-trips the doubles exactly, so the
+        wire doc equals the stored doc bit-for-bit."""
         with self._lock:
-            docs = self._cached_docs(index)
-            id_type = dict(docs.dtypes)[ID_FIELD]
+            id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
             ids = self._coerce_ids(id_type, [doc_id])
-            if not ids:
-                return None
-            d = ids[0]
-            if self.store_backed:
-                ck = (index, d)
-                qrows = self._doc_cache.get(ck)
-                if qrows is None:
-                    qrows = self._query_doc_df(index, d).collect()
-                    if len(self._doc_cache) >= 4096:  # FIFO cap
-                        self._doc_cache.pop(next(iter(self._doc_cache)))
-                    self._doc_cache[ck] = qrows
-            else:
-                qrows = docs.where(
-                    F.col(ID_FIELD) == F.lit(d).cast(id_type)
-                ).collect()
-            if not qrows:
-                return None
-            q = qrows[0]
-            return {
-                "_index": index,
-                "_id": q[ID_FIELD],
-                "found": True,
-                "_source": {VECTOR_FIELD: list(q[VECTOR_FIELD])},
-            }
+            q = self._stored_docs(index, ids)[ids[0]] if ids else None
+        if q is None:
+            return None
+        return {
+            "_index": index,
+            "_id": q[ID_FIELD],
+            "found": True,
+            "_source": {VECTOR_FIELD: list(q[VECTOR_FIELD])},
+        }
 
     def models(self) -> dict:
         return {"models": self.registry.names()}
@@ -1247,7 +1000,7 @@ def _make_handler(server: AknnHttpServer):
     return Handler
 
 
-# server + indexed store, once per (SparkContext, sf_dir, mode) — the
+# server + indexed store, once per (SparkContext, sf_dir, tag) — the
 # facade's create+index phase is index MAINTENANCE; repeat calls measure
 # serving
 _SERVER_CACHE: dict[tuple, AknnHttpServer] = {}
@@ -1278,35 +1031,26 @@ def _http_get(port: int, path: str) -> dict:
     return out
 
 
-def aknn_http_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry (SURVEY §2 #156): the three HTTP endpoints driven
-    over a real localhost socket — model fit via POST /_aknn_create (the
-    canonical 2·T·B sample posted in the body), the full embeddings table
-    POSTed through /_aknn_index in batches, and the canonical query ids
-    searched via GET /{index}/{id}/_aknn_search — then the JSON hit lists
-    reassembled into the (query_id, neighbor_id, n_match, distance)
-    frame. Gated by the shared ann_search_lsh oracle: the wire round-trip
-    (JSON floats both directions — exact, shortest-repr) must be
-    bit-identical to the in-memory search path."""
-    return _drive_endpoints(spark, sf_dir, store_backed=False)
-
-
 def aknn_http_search_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry (SURVEY §2 #157, r11): the SAME three endpoints and
-    the same wire payloads served from the partition-pruned store layout
-    (store_backed=True — docs/ by id_bucket, terms/ by (tbl, bucket)).
-    Gated by the same shared ann_search_lsh oracle as the flat-mode twin:
-    the pruned serving path must be bit-identical to the in-memory search,
-    proving the 100 TB layout is lossless behind an unchanged protocol."""
-    return _drive_endpoints(spark, sf_dir, store_backed=True)
+    """Registry entry (SURVEY §2 #156/#157): the three HTTP endpoints
+    driven over a real localhost socket — model fit via POST /_aknn_create
+    (the canonical 2·T·B sample posted in the body), the full embeddings
+    table POSTed through /_aknn_index in batches into the partitioned
+    store (docs/ by id_bucket, terms/ by (tbl, bucket)), and the canonical
+    query ids searched — then the JSON hit lists reassembled into the
+    (query_id, neighbor_id, n_match, distance) frame. Gated by the shared
+    ann_search_lsh oracle: the wire round-trip (JSON floats both
+    directions — exact, shortest-repr) and the pruned serving path must be
+    bit-identical to the in-memory search path."""
+    return _drive_endpoints(spark, sf_dir)
 
 
 def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (SURVEY §2 #160, r11): the reference's REPLACE
     semantics over the wire. An ES index op with an existing _id replaces
-    the stored document — so `/_aknn_index` purges incoming ids from the
-    store before appending (pruned dynamic overwrite of the ≤ |batch|
-    docs directories and the doomed ids' term directories in store mode).
+    the stored document — so `/_aknn_index` drops incoming ids' stored
+    rows in the same pruned dynamic overwrite that lands the new ones (the
+    ≤ |batch| docs directories and the old and new term directories).
     The drive posts the full table, then RE-POSTS the canonical update set
     (vec_id % UPSERT_MOD == 0, every component doubled — IEEE-exact, and
     JSON round-trips doubles exactly) through the same endpoint against
@@ -1328,9 +1072,7 @@ def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             if d[ID_FIELD] % UPSERT_MOD == 0
         ]
 
-    return _drive_endpoints(
-        spark, sf_dir, store_backed=True, tag="upsert", repost=update
-    )
+    return _drive_endpoints(spark, sf_dir, tag="upsert", repost=update)
 
 
 def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,7 +1083,7 @@ def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical purge set (vec_id % DELETE_MOD == DELETE_REM) over the
     wire via POST /_aknn_delete — the single-doc DELETE /{index}/{id}
     endpoint runs the same delete_ids path with 200 deleted / 404
-    not_found semantics, unit-tested both modes — then searches every
+    not_found semantics, unit-tested — then searches every
     canonical query id. Gated by the shared index_delete oracle: the wire
     purge must equal a full rebuild on the filtered corpus; a purged QUERY
     id returns zero hits (unknown-id semantics) and so contributes no rows
@@ -1358,15 +1100,15 @@ def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"wire delete removed {out['deleted']} of {len(doomed)} docs"
             )
 
-    return _drive_endpoints(spark, sf_dir, store_backed=True, tag="delete", mutate=purge)
+    return _drive_endpoints(spark, sf_dir, tag="delete", mutate=purge)
 
 
 def aknn_http_doc_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (SURVEY §2 #163, r13): ES document-GET parity —
     GET /{index}/{id} returns the stored doc from its single pruned
     id_bucket directory (the exact read + per-id cache the serving path
-    uses), 404 for an unknown id. The drive reuses the store-backed
-    search server's built index (shared _SERVER_CACHE key — no second
+    uses), 404 for an unknown id. The drive reuses the
+    aknn_http_search_store server's built index (shared _SERVER_CACHE key — no second
     load), GETs every canonical query id plus one unknown id (asserted
     404, contributing no rows), and explodes the JSON vectors to
     (vec_id, dim, x) rows. Gated directly against the embeddings
@@ -1376,7 +1118,7 @@ def aknn_http_doc_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .constants import N_QUERIES
 
-    srv = _ensure_server(spark, sf_dir, store_backed=True)
+    srv = _ensure_server(spark, sf_dir)
     rows = []
     for qid in range(N_QUERIES):
         res = _http_get(srv.port, f"/vectors/{qid}")
@@ -1404,35 +1146,30 @@ def aknn_http_bulk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle like the other serving keys: searches over the bulk-loaded
     store must be bit-identical to the in-memory search path, so a doc
     lost (or duplicated) anywhere in stage → merge fails the hash gate."""
-    return _drive_endpoints(spark, sf_dir, store_backed=True, tag="bulk", bulk=True)
+    return _drive_endpoints(spark, sf_dir, tag="bulk", bulk=True)
 
 
 def _ensure_server(
     spark: SparkSession,
     sf_dir: str,
-    store_backed: bool,
     tag: str | None = None,
     repost=None,
     mutate=None,
     bulk: bool = False,
 ) -> AknnHttpServer:
     """Build (or reuse from _SERVER_CACHE) the drive server for one
-    (mode, tag) — create + index + optional mutate + compact. Split out
+    tag — create + index + optional mutate + compact. Split out
     of _drive_endpoints (r13) so non-search drives (doc GET) share the
     same built store instead of paying a second load."""
     from . import io
     from .session import configure
 
     configure(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, store_backed, tag)
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
     srv = _SERVER_CACHE.get(key)
     if srv is None:
-        kind = f"aknn_http_{tag}" if tag else (
-            "aknn_http_store" if store_backed else "aknn_http"
-        )
-        srv = AknnHttpServer(
-            spark, io.scratch_dir(kind, sf_dir), store_backed=store_backed
-        ).start()
+        kind = f"aknn_http_{tag}" if tag else "aknn_http_store"
+        srv = AknnHttpServer(spark, io.scratch_dir(kind, sf_dir)).start()
         try:
             emb = io.table(spark, sf_dir, "embeddings", widen=True)
             docs = [
@@ -1453,13 +1190,12 @@ def _ensure_server(
                 _http_post(srv.port, "/_aknn_refresh", {"_index": "vectors"})
             if mutate is not None:
                 mutate(srv.port, docs)
-            if store_backed:
-                # r13: close the maintenance loop the r12 verdict flagged —
-                # the batched appends (and any purge/replace churn) leave
-                # one file per touched directory per request; a real
-                # operator compacts after a load, so the drives do too.
-                # Served rows are unchanged (same oracle gates them).
-                _http_post(srv.port, "/_aknn_compact", {"_index": "vectors"})
+            # r13: close the maintenance loop the r12 verdict flagged —
+            # the batched appends (and any purge/replace churn) leave one
+            # file per touched directory per request; a real operator
+            # compacts after a load, so the drives do too. Served rows are
+            # unchanged (same oracle gates them).
+            _http_post(srv.port, "/_aknn_compact", {"_index": "vectors"})
         except BaseException:
             # ADVICE r11: never cache a partially-built server — a same-
             # session retry would skip indexing and gate against a partial
@@ -1473,7 +1209,6 @@ def _ensure_server(
 def _drive_endpoints(
     spark: SparkSession,
     sf_dir: str,
-    store_backed: bool,
     tag: str | None = None,
     repost=None,
     mutate=None,
@@ -1481,12 +1216,12 @@ def _drive_endpoints(
 ) -> DataFrame:
     from .constants import N_QUERIES
 
-    srv = _ensure_server(spark, sf_dir, store_backed, tag, repost, mutate, bulk)
+    srv = _ensure_server(spark, sf_dir, tag, repost, mutate, bulk)
     # r13: the canonical queries go over the wire as ONE _aknn_msearch
     # request — Q queries share one ranked-collect job instead of paying
     # Q × fixed per-request driver cost (the r12 verdict's job-count
     # item); per-query payloads are identical to the per-id GET's (the
-    # endpoint is unit-tested equal both modes), so the gate is unchanged
+    # endpoint is unit-tested equal), so the gate is unchanged
     rows = []
     res = _http_post(
         srv.port,

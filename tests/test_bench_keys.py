@@ -117,7 +117,16 @@ def test_aliases_append_only_vs_latest_round_snapshot():
         frozen = json.load(f)
     with open(os.path.join(_ROOT, "tools", "bench_keys.json")) as f:
         current = json.load(f)
-    repointed = {k: (v, current.get(k)) for k, v in frozen.items() if current.get(k) != v}
+    # a key (with its derived `_memo` twin) may leave the current map only
+    # by leaving the registry; its alias stays reserved (the reuse check
+    # below still reads it)
+    reg = set(registry.queries())
+    retired = {k for k in frozen if k.removesuffix("_memo") not in reg}
+    repointed = {
+        k: (v, current.get(k))
+        for k, v in frozen.items()
+        if current.get(k) != v and k not in retired
+    }
     assert not repointed, f"aliases re-pointed or dropped vs {versioned[-1]}: {repointed}"
     # and the reverse direction: no alias string reused for a different name
     inv_frozen = {a: n for n, a in frozen.items()}

@@ -33,7 +33,6 @@ EXPECTED_GATE_WINDOW = [
     "aknn_http_upsert",
     "aknn_http_delete",
     "aknn_http_bulk_ingest",
-    "aknn_http_search",
     "aknn_http_doc_get",
     "streaming_index_compact",
     "index_upsert",
@@ -79,6 +78,9 @@ EXPECTED_GATE_WINDOW = [
     "knn_graph_multiprobe",
     "bm25_doc_search",
     "hybrid_search_rrf",
+    # the head of the rotation queue, promoted when the flat-layout
+    # serving key aknn_http_search left the registry
+    "source_stats",
 ]
 
 
@@ -97,7 +99,8 @@ def test_expected_window_is_exactly_the_gate_size():
 
 
 def test_registry_still_covers_every_survey_key():
-    # the rotation must reorder, never drop: 163 keys (SURVEY §2), all unique
+    # the rotation must reorder, never drop: 162 keys (SURVEY §2 minus the
+    # retired flat-layout #156 aknn_http_search), all unique
     ks = list(registry.queries())
-    assert len(ks) == 163
-    assert len(set(ks)) == 163
+    assert len(ks) == 162
+    assert len(set(ks)) == 162

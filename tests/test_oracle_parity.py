@@ -7,7 +7,7 @@ suite's full wall clock — its r13 gate "hang" was the unparametrized
 full replica duplicates work the driver itself performs (its own 50-key
 oracle gate) and that tools/verify_drive.py runs locally at every round
 ritual, so the default suite now checks a fixed cross-family SMOKE subset
-(~1 min) and the full 163-key sweep stays available via ENN_FULL_PARITY=1
+(~1 min) and the full-registry sweep stays available via ENN_FULL_PARITY=1
 (used by the round rituals alongside verify_drive)."""
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ SMOKE_KEYS = [
     "q1_pricing_summary",      # TPC-H aggregate
     "events_sessionize",       # events window family
     "multimodal_featurize",    # multimodal decode path
+    "aknn_http_search_store",  # server.py wire + store patch/serve path
 ]
 
 KEYS = (
