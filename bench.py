@@ -306,7 +306,7 @@ def main() -> None:
 
     _m = _re.search(r"sf([0-9.]+)", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     sf = float(_m.group(1)) if _m else 0.0
-    spark = get_spark(app_name="enn-bench", cpus=cpus, shuffle_partitions=max(cpus, 32))
+    spark = get_spark(app_name="enn-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     # warm up the JVM, Python UDF workers, and the parquet footer cache so

@@ -52,6 +52,13 @@ from ..constants import (
 )
 from .. import io
 from ..functions.vector import as_double, euclidean
+from ..sources.index_store import (
+    GRAPH_EDGE_BUCKETS,
+    build_once,
+    load_graph_buckets,
+    patch_once,
+    save_graph_edges,
+)
 from .ivf import IvfModel, _emb, ann_search_ivf, model_for, probe_pairs
 
 # graph edges, materialized once per (SparkContext, sf_dir) — the search
@@ -543,8 +550,6 @@ def _pruned_store_search(spark: SparkSession, store: str, corpus: DataFrame, mod
     seed-id collect is Q·GRAPH_SEED_K ints — KB-sized, like the IVF probe
     list. Used by ann_search_graph_store (full corpus), graph_delete and
     graph_rebuild (surviving corpus over the patched / rebuilt store)."""
-    from ..sources.index_store import GRAPH_EDGE_BUCKETS, load_graph_buckets
-
     queries = corpus.where(F.col("vec_id") < N_QUERIES)
     key = (spark.sparkContext.applicationId, store)
     hit = _SEED_CACHE.get(key)
@@ -571,13 +576,10 @@ def ann_search_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_search_graph (same oracle), proving the pruned path is lossless.
     This is the 100 TB shape: the graph is built once offline, and each
     query batch touches ≤ |seed buckets| / 64 of it on disk."""
-    from ..sources.index_store import save_graph_edges
-
     model = model_for(sf_dir)
     emb = _emb(spark, sf_dir)
     out = io.fs_join(io.scratch_dir("graph_store", sf_dir), "data")
-    if not io.fs_exists(spark, io.fs_join(out, "_SUCCESS")):
-        save_graph_edges(graph_edges(spark, sf_dir), out)
+    build_once(spark, out, lambda: save_graph_edges(graph_edges(spark, sf_dir), out))
     return _pruned_store_search(spark, out, emb, model)
 
 
@@ -613,53 +615,25 @@ def graph_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (query_id, neighbor_id, distance) top-ANN_K2 per surviving
     query."""
     from ..constants import DELETE_MOD, DELETE_REM
-    from ..sources.index_store import save_graph_edges
 
     model = model_for(sf_dir)
     emb = _emb(spark, sf_dir)
     out = io.scratch_dir("graph_delete", sf_dir)
     store = io.fs_join(out, "data")
-    marker = io.fs_join(out, "DELETED")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        save_graph_edges(graph_edges(spark, sf_dir), store)
+    build_once(spark, store, lambda: save_graph_edges(graph_edges(spark, sf_dir), store))
     doomed_edge = (F.col("vec_a") % DELETE_MOD == DELETE_REM) | (
         F.col("vec_b") % DELETE_MOD == DELETE_REM
     )
-    if not io.fs_exists(spark, marker):
-        _purge_edges(spark, store, doomed_edge)
-        io.fs_touch(spark, marker)
+    # touched = every bucket holding a doomed edge: vec_a-doomed edges live
+    # in the id's own bucket, vec_b-doomed ones wherever in-edges land, so
+    # one column-pruned store scan finds them (≤ GRAPH_EDGE_BUCKETS ints)
+    touched = io.read_parquet(spark, store).where(doomed_edge)
+    patch_once(spark, store, io.fs_join(out, "DELETED"), ["bucket"], touched, ~doomed_edge)
 
     # search: surviving corpus + original quantizer seeds + hop over the
     # patched store — the same pruned shape as ann_search_graph_store
     surv = emb.where(F.col("vec_id") % DELETE_MOD != DELETE_REM)
     return _pruned_store_search(spark, store, surv, model)
-
-
-def _purge_edges(spark: SparkSession, store: str, doomed_edge) -> None:
-    """Drop every edge matching `doomed_edge` from a persisted edge store,
-    in place: one column-pruned scan finds the buckets holding any doomed
-    edge (vec_a-doomed live in the id's own bucket; vec_b-doomed wherever
-    in-edges land) — the collect is ≤ GRAPH_EDGE_BUCKETS ints, and only
-    those directories get rewritten via index_store.pruned_dynamic_overwrite
-    (emptied directories deleted explicitly — stale files would otherwise
-    keep matching)."""
-    from ..sources.index_store import pruned_dynamic_overwrite
-
-    touched = sorted(
-        int(r.bucket)
-        for r in io.read_parquet(spark, store)
-        .where(doomed_edge)
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    existing = (
-        io.read_parquet(spark, store)
-        .where(F.col("bucket").isin(touched))
-        .select("vec_a", "vec_b", "distance", "bucket")
-    )
-    patched = existing.where(~doomed_edge)
-    pruned_dynamic_overwrite(spark, store, patched, ["bucket"], touched)
 
 
 def graph_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,7 +670,6 @@ def graph_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (query_id, neighbor_id, distance) top-ANN_K2 per surviving
     query."""
     from ..constants import GRAPH_REBUILD_MOD, GRAPH_REBUILD_REM
-    from ..sources.index_store import save_graph_edges
 
     model = model_for(sf_dir)
     emb = _emb(spark, sf_dir)

@@ -27,6 +27,14 @@ from .. import io
 from ..constants import ANN_K1, ANN_K2, DIST_ROUND, KNN_K, N_QUERIES
 from ..functions.vector import as_double, euclidean
 from ..session import configure
+from ..sources.index_store import (
+    DEFAULT_HASH_BUCKETS,
+    build_once,
+    load_lsh_partitions,
+    lsh_terms,
+    patch_once,
+    save_lsh_index,
+)
 from .lsh import LshModel, build_index, explode_hashes
 
 
@@ -658,8 +666,6 @@ def search_lsh_store(
     streaming-appended store (streaming/ingest.streaming_index_store), the
     compacted store, and the upserted store (which passes the UPDATED
     vector table as `emb`) — one search path, four index producers."""
-    from ..sources.index_store import DEFAULT_HASH_BUCKETS, load_lsh_partitions
-
     canonical = emb is None
     if canonical:
         emb = _emb(spark, sf_dir)
@@ -706,12 +712,8 @@ def ann_search_lsh_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the pruned store path is lossless (mirror of ann_search_ivf_store
     for the IVF family). At 100 TB a batch of Q queries touches ≤ Q·T of
     the T·n_buckets directories instead of the whole index."""
-    from ..sources.index_store import save_lsh_index
-
-    out = io.scratch_dir("lsh_store", sf_dir)
-    store = io.fs_join(out, "data")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        save_lsh_index(lsh_index(spark, sf_dir), store)
+    store = io.fs_join(io.scratch_dir("lsh_store", sf_dir), "data")
+    build_once(spark, store, lambda: save_lsh_index(lsh_index(spark, sf_dir), store))
     return search_lsh_store(spark, sf_dir, store)
 
 
@@ -750,12 +752,6 @@ def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the daily reality of an index: a delta of D changed
     vectors touches ≤ D·T directories of the T·n_buckets total."""
-    from ..sources.index_store import (
-        DEFAULT_HASH_BUCKETS,
-        partition_key_filter,
-        pruned_dynamic_overwrite,
-        save_lsh_index,
-    )
     from ..constants import UPSERT_MOD
 
     emb = _emb(spark, sf_dir)
@@ -763,46 +759,17 @@ def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     memb = _updated_emb(spark, sf_dir)
     out = io.scratch_dir("lsh_upsert", sf_dir)
     store = io.fs_join(out, "data")
+    build_once(spark, store, lambda: save_lsh_index(lsh_index(spark, sf_dir), store))
+    changed = F.col("vec_id") % UPSERT_MOD == 0
+    terms = lambda df: lsh_terms(
+        explode_hashes(build_index(df.where(changed), model), "vec_id", "vec_id")
+    )
+    new_terms = terms(memb)
+    # touched = the (tbl, bucket) dirs that held or now hold a changed
+    # vector; a ~6% delta × T tables touches most buckets at this scale
+    touched = terms(emb).unionByName(new_terms)
     marker = io.fs_join(out, "UPSERTED")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        save_lsh_index(lsh_index(spark, sf_dir), store)
-    if not io.fs_exists(spark, marker):
-        changed_old = explode_hashes(
-            build_index(emb.where(F.col("vec_id") % UPSERT_MOD == 0), model),
-            "vec_id",
-            "vec_id",
-        )
-        changed_new = explode_hashes(
-            build_index(memb.where(F.col("vec_id") % UPSERT_MOD == 0), model),
-            "vec_id",
-            "vec_id",
-        )
-        bucket = lambda df: df.select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-        )
-        old_b, new_b = bucket(changed_old), bucket(changed_new)
-        parts = [
-            (r.tbl, r.bucket)
-            for r in old_b.select("tbl", "bucket")
-            .union(new_b.select("tbl", "bucket"))
-            .distinct()
-            .collect()
-        ]
-        # packed-key IN over the partition columns (partition_key_filter):
-        # stays a PartitionFilter without the O(dirs)-deep OR-tree that
-        # load_lsh_partitions' literal list would build here — a ~6% delta
-        # × T tables touches most buckets at this scale
-        existing = (
-            io.read_parquet(spark, store)
-            .where(partition_key_filter(["tbl", "bucket"], parts))
-            .select("vec_id", "tbl", "hash", "bucket")
-        )
-        patched = existing.where(F.col("vec_id") % UPSERT_MOD != 0).unionByName(new_b)
-        pruned_dynamic_overwrite(spark, store, patched, ["tbl", "bucket"], parts)
-        io.fs_touch(spark, marker)
+    patch_once(spark, store, marker, ["tbl", "bucket"], touched, ~changed, new_terms)
     # the updated table is deterministic per sf_dir, so its probe set is
     # cacheable under its own tag (repeat searches skip the collect job)
     return search_lsh_store(spark, sf_dir, store, emb=memb, parts_tag="upsert")
@@ -828,40 +795,18 @@ def index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, n_match, distance)."""
     from ..constants import DELETE_MOD, DELETE_REM
-    from ..sources.index_store import (
-        DEFAULT_HASH_BUCKETS,
-        partition_key_filter,
-        pruned_dynamic_overwrite,
-        save_lsh_index,
-    )
 
     emb = _emb(spark, sf_dir)
     model = _model_for(emb, sf_dir)
     out = io.scratch_dir("lsh_delete", sf_dir)
     store = io.fs_join(out, "data")
-    marker = io.fs_join(out, "DELETED")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        save_lsh_index(lsh_index(spark, sf_dir), store)
+    build_once(spark, store, lambda: save_lsh_index(lsh_index(spark, sf_dir), store))
     doomed_pred = F.col("vec_id") % DELETE_MOD == DELETE_REM
-    if not io.fs_exists(spark, marker):
-        doomed = explode_hashes(
-            build_index(emb.where(doomed_pred), model), "vec_id", "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-        )
-        parts = [
-            (r.tbl, r.bucket) for r in doomed.select("tbl", "bucket").distinct().collect()
-        ]
-        existing = (
-            io.read_parquet(spark, store)
-            .where(partition_key_filter(["tbl", "bucket"], parts))
-            .select("vec_id", "tbl", "hash", "bucket")
-        )
-        patched = existing.where(~doomed_pred)
-        pruned_dynamic_overwrite(spark, store, patched, ["tbl", "bucket"], parts)
-        io.fs_touch(spark, marker)
+    # touched = the (tbl, bucket) dirs of the re-hashed doomed vectors
+    doomed = lsh_terms(
+        explode_hashes(build_index(emb.where(doomed_pred), model), "vec_id", "vec_id")
+    )
+    patch_once(spark, store, io.fs_join(out, "DELETED"), ["tbl", "bucket"], doomed, ~doomed_pred)
     # deterministic surviving-id query batch → cacheable probe set
     return search_lsh_store(
         spark, sf_dir, store, emb=emb.where(~doomed_pred), parts_tag="delete"

@@ -47,6 +47,7 @@ from ..constants import (
     PQ_SAMPLE,
 )
 from ..session import configure
+from ..sources.index_store import build_once, load_ivf_lists, patch_once, save_ivf_index
 
 
 class PqModel:
@@ -344,29 +345,60 @@ def ann_search_ivfpq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     index at 1/128 the bytes of raw vectors, and the raw embeddings are
     never opened at all. Results are identical to ann_search_ivfpq (same
     oracle), proving the pruned persisted path lossless."""
-    from ..constants import DEC
-    from ..sources.index_store import load_ivf_lists, save_ivf_index
-    from .ivf import list_assignments
     from .ivf import model_for as ivf_model_for
-    from .ivf import probe_pairs
 
     emb = _emb(spark, sf_dir)
     out = io.fs_join(io.scratch_dir("ivfpq_store", sf_dir), "data")
-    if not io.fs_exists(spark, io.fs_join(out, "_SUCCESS")):
-        # (vec_id, m, code, list_id): the compressed index rows carry their
-        # list so the store needs no side lookup at query time
-        rows = pq_codes(spark, sf_dir).join(list_assignments(spark, sf_dir), "vec_id")
-        save_ivf_index(rows, out)
+    _build_ivfpq_store(spark, sf_dir, out)
+    return _search_ivfpq_store(
+        spark,
+        out,
+        ivf_model_for(sf_dir),
+        emb.where(F.col("vec_id") < N_QUERIES),
+        _query_dist_table(spark, sf_dir),
+        "canonical",
+    )
 
-    queries = emb.where(F.col("vec_id") < N_QUERIES)
-    probes = probe_pairs(queries, ivf_model_for(sf_dir))
+
+def _build_ivfpq_store(spark: SparkSession, sf_dir: str, store: str) -> None:
+    """(vec_id, m, code, list_id) partitioned by list_id, built once: the
+    compressed index rows carry their list so the store needs no side
+    lookup at query time."""
+    from .ivf import list_assignments
+
+    build_once(
+        spark,
+        store,
+        lambda: save_ivf_index(
+            pq_codes(spark, sf_dir).join(list_assignments(spark, sf_dir), "vec_id"), store
+        ),
+    )
+
+
+def _search_ivfpq_store(
+    spark: SparkSession,
+    store: str,
+    ivfm,
+    queries: DataFrame,
+    dist_table: DataFrame,
+    tag: str,
+) -> DataFrame:
+    """Shared ADC store-search tail (ivf._search_ivf_store's twin): probe
+    lists of `queries` under the IVF model `ivfm`, partition-pruned read of
+    only those list directories (codes only, never the raw vectors), ADC
+    scoring against the broadcast `dist_table`, top-ANN_K2 per query. `tag`
+    names the deterministic query batch for the probe-list cache."""
+    from ..constants import DEC
+    from .ivf import probe_pairs
+
+    probes = probe_pairs(queries, ivfm)
     # KB-bounded driver probe set (N_QUERIES·nprobe ids) → literal pruning
-    probe_lists = _probe_lists_for(spark, probes, out, "canonical")
-    codes = load_ivf_lists(spark, out, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
+    probe_lists = _probe_lists_for(spark, probes, store, tag)
+    codes = load_ivf_lists(spark, store, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
     adc = (
         codes.join(F.broadcast(probes), "list_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(_query_dist_table(spark, sf_dir)), ["query_id", "m", "code"])
+        .join(F.broadcast(dist_table), ["query_id", "m", "code"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
     )
@@ -396,15 +428,9 @@ def ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave and arrive sides of the patch are exercised.
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per query."""
-    from ..constants import DEC, UPSERT_MOD
-    from ..sources.index_store import (
-        load_ivf_lists,
-        pruned_dynamic_overwrite,
-        save_ivf_index,
-    )
-    from .ivf import build_ivf_index, list_assignments
+    from ..constants import UPSERT_MOD
+    from .ivf import build_ivf_index
     from .ivf import model_for as ivf_model_for
-    from .ivf import probe_pairs
     from .knn import _updated_emb
 
     emb = _emb(spark, sf_dir)
@@ -413,59 +439,32 @@ def ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfm = ivf_model_for(sf_dir)
     out = io.scratch_dir("ivfpq_upsert", sf_dir)
     store = io.fs_join(out, "data")
-    marker = io.fs_join(out, "UPSERTED")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        rows = pq_codes(spark, sf_dir).join(list_assignments(spark, sf_dir), "vec_id")
-        save_ivf_index(rows, store)
+    _build_ivfpq_store(spark, sf_dir, store)
     changed = F.col("vec_id") % UPSERT_MOD == 0
-    if not io.fs_exists(spark, marker):
-        # leave side: the changed ids' ORIGINAL lists; arrive side: their
-        # NEW lists under the original centroids — both collects are
-        # ≤ min(2·D, nlist) ints, the ivf_upsert bound
-        old_a = build_ivf_index(emb.where(changed), ivfm).select("vec_id", "list_id")
-        new_a = build_ivf_index(memb.where(changed), ivfm).select("vec_id", "list_id")
-        parts = [
-            int(r.list_id)
-            for r in old_a.select("list_id").union(new_a.select("list_id")).distinct().collect()
-        ]
-        new_rows = (
-            memb.where(changed)
-            .select(
-                "vec_id",
-                F.posexplode(pqm.codes_udf()(F.col("embedding"))).alias("m", "code"),
-            )
-            .join(new_a, "vec_id")
-        )
-        existing = (
-            io.read_parquet(spark, store)
-            .where(F.col("list_id").isin(parts))
-            .select("vec_id", "m", "code", "list_id")
-        )
-        patched = existing.where(~changed).unionByName(
-            new_rows.select("vec_id", "m", "code", "list_id")
-        )
-        pruned_dynamic_overwrite(spark, store, patched, ["list_id"], parts)
-        io.fs_touch(spark, marker)
-
-    # search the patched store with the UPDATED queries (dist table and
-    # probes both from the updated vectors) — same pruned plan as
-    # ann_search_ivfpq_store
-    queries = memb.where(F.col("vec_id") < N_QUERIES)
-    probes = probe_pairs(queries, ivfm)
-    probe_lists = _probe_lists_for(spark, probes, store, "upsert")
-    codes = load_ivf_lists(spark, store, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "list_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(
-            F.broadcast(_query_dist_table(spark, sf_dir, emb=memb, tag="upsert")),
-            ["query_id", "m", "code"],
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
+    # leave side: the changed ids' ORIGINAL lists; arrive side: their NEW
+    # lists under the original centroids — the touched collect is
+    # ≤ min(2·D, nlist) ints, the ivf_upsert bound
+    old_a = build_ivf_index(emb.where(changed), ivfm).select("vec_id", "list_id")
+    new_a = build_ivf_index(memb.where(changed), ivfm).select("vec_id", "list_id")
+    new_rows = (
+        memb.where(changed)
+        .select("vec_id", F.posexplode(pqm.codes_udf()(F.col("embedding"))).alias("m", "code"))
+        .join(new_a, "vec_id")
+        .select("vec_id", "m", "code", "list_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    touched = old_a.select("list_id").union(new_a.select("list_id"))
+    marker = io.fs_join(out, "UPSERTED")
+    patch_once(spark, store, marker, ["list_id"], touched, ~changed, new_rows)
+    # search the patched store with the UPDATED queries (dist table and
+    # probes both from the updated vectors)
+    return _search_ivfpq_store(
+        spark,
+        store,
+        ivfm,
+        memb.where(F.col("vec_id") < N_QUERIES),
+        _query_dist_table(spark, sf_dir, emb=memb, tag="upsert"),
+        "upsert",
+    )
 
 
 def ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,59 +491,29 @@ def ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per surviving
     query."""
-    from ..constants import DEC, DELETE_MOD, DELETE_REM
-    from ..sources.index_store import (
-        load_ivf_lists,
-        pruned_dynamic_overwrite,
-        save_ivf_index,
-    )
+    from ..constants import DELETE_MOD, DELETE_REM
     from .ivf import list_assignments
     from .ivf import model_for as ivf_model_for
-    from .ivf import probe_pairs
 
     emb = _emb(spark, sf_dir)
     out = io.scratch_dir("ivfpq_delete", sf_dir)
     store = io.fs_join(out, "data")
-    marker = io.fs_join(out, "DELETED")
-    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
-        rows = pq_codes(spark, sf_dir).join(list_assignments(spark, sf_dir), "vec_id")
-        save_ivf_index(rows, store)
+    _build_ivfpq_store(spark, sf_dir, store)
     doomed_pred = F.col("vec_id") % DELETE_MOD == DELETE_REM
-    if not io.fs_exists(spark, marker):
-        # only the doomed ids' assignments are recomputed — the collect is
-        # ≤ min(D, nlist) list ids, the same KB bound as ivf_delete
-        parts = [
-            int(r.list_id)
-            for r in list_assignments(spark, sf_dir)
-            .where(doomed_pred)
-            .select("list_id")
-            .distinct()
-            .collect()
-        ]
-        existing = (
-            io.read_parquet(spark, store)
-            .where(F.col("list_id").isin(parts))
-            .select("vec_id", "m", "code", "list_id")
-        )
-        patched = existing.where(~doomed_pred)
-        pruned_dynamic_overwrite(spark, store, patched, ["list_id"], parts)
-        io.fs_touch(spark, marker)
-
+    # only the doomed ids' assignments name the touched lists — the
+    # collect is ≤ min(D, nlist) list ids, the same KB bound as ivf_delete
+    doomed = list_assignments(spark, sf_dir).where(doomed_pred)
+    patch_once(spark, store, io.fs_join(out, "DELETED"), ["list_id"], doomed, ~doomed_pred)
     # search the patched store: identical plan to ann_search_ivfpq_store,
     # with doomed QUERY ids excluded (a purged id can't issue queries)
-    queries = emb.where((F.col("vec_id") < N_QUERIES) & ~doomed_pred)
-    probes = probe_pairs(queries, ivf_model_for(sf_dir))
-    probe_lists = _probe_lists_for(spark, probes, store, "delete")
-    codes = load_ivf_lists(spark, store, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "list_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(_query_dist_table(spark, sf_dir)), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
+    return _search_ivfpq_store(
+        spark,
+        store,
+        ivf_model_for(sf_dir),
+        emb.where((F.col("vec_id") < N_QUERIES) & ~doomed_pred),
+        _query_dist_table(spark, sf_dir),
+        "delete",
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
 
 
 def ann_recall_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,6 +39,9 @@ _QUERIES: dict[str, QueryFn] = {
     "aknn_http_bulk_ingest": server.aknn_http_bulk_ingest,
     "aknn_http_doc_get": server.aknn_http_doc_get,
     "streaming_index_compact": ingest.streaming_index_compact,
+    # promoted with the one store-maintenance path (index_store.py
+    # write_clustered/lsh_terms): its streaming append changed
+    "streaming_index_store": ingest.streaming_index_store,
     # (2) store maintenance + persisted-store searches — index_store.py
     # changed (clustered() explicit-count writes, schema-cached loaders);
     # index_upsert/index_delete also re-gate per the r13 verdict item 4:
@@ -88,10 +91,10 @@ _QUERIES: dict[str, QueryFn] = {
     "ann_recall_ivfpq_refined": pq.ann_recall_ivfpq_refined,
     "ann_search_graph": graph.ann_search_graph_q,
     "ann_search_graph_beam": graph.ann_search_graph_beam_q,
+    # the r14-verdict re-gate: its beam core changed after it rotated out
+    "ann_recall_graph_beam": graph.ann_recall_graph_beam_q,
     "ann_recall_graph_sweep": graph.ann_recall_graph_sweep,
     "knn_graph_multiprobe": graph.knn_graph_multiprobe,
-    "bm25_doc_search": search.bm25_doc_search,
-    "hybrid_search_rrf": search.hybrid_search_rrf,
     # promoted from the head of the rotation queue when the flat-layout
     # serving key aknn_http_search was removed:
     "source_stats": analytics.source_stats,
@@ -108,7 +111,6 @@ _QUERIES: dict[str, QueryFn] = {
     "streaming_dedup_state": ingest.streaming_dedup_state,
     "streaming_events_hourly": ingest.streaming_events_hourly,
     "streaming_index": ingest.streaming_index,
-    "streaming_index_store": ingest.streaming_index_store,
     "streaming_ann_search": ingest.streaming_ann_search,
     "streaming_graph_search": ingest.streaming_graph_search,
     "ann_recall_matryoshka": knn.ann_recall_matryoshka,
@@ -212,9 +214,12 @@ _QUERIES: dict[str, QueryFn] = {
     "seq_pack": textops.seq_pack,
     "source_cap": textops.source_cap,
     "stratified_sample": textops.stratified_sample,
-    "ann_recall_graph_beam": graph.ann_recall_graph_beam_q,
     "bm25_doc_search_char": search.bm25_doc_search_char,
     "phrase_match": search.phrase_match,
+    # -- displaced from the window when streaming_index_store and
+    # ann_recall_graph_beam were promoted (search.py unchanged since) --
+    "bm25_doc_search": search.bm25_doc_search,
+    "hybrid_search_rrf": search.hybrid_search_rrf,
 }
 
 # oracle builders: sf_dir -> SQL

@@ -84,6 +84,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -98,7 +99,7 @@ from .api import (
     aknn_index,
 )
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
-from .sources.index_store import DEFAULT_HASH_BUCKETS
+from .sources.index_store import DEFAULT_HASH_BUCKETS, lsh_terms, write_clustered
 
 # partition columns of the two sides of the one index layout
 DOCS_PARTS = ["id_bucket"]
@@ -109,25 +110,11 @@ def _id_bucket(id_col: Column) -> Column:
     return F.pmod(F.xxhash64(id_col), F.lit(DEFAULT_HASH_BUCKETS))
 
 
-def _term_cols(terms: DataFrame) -> DataFrame:
-    """terms/ rows in the stored column types."""
-    return terms.select(
-        "vec_id",
-        F.col("tbl").cast("int").alias("tbl"),
-        "hash",
-        F.col("bucket").cast("int").alias("bucket"),
-    )
-
-
 def _terms_of(hashed: DataFrame) -> DataFrame:
-    """The terms/ rows of hashed docs: one (vec_id, tbl, hash, bucket) row
-    per table."""
+    """The terms/ rows of hashed docs: one `lsh_terms` row per table."""
     from .operators.lsh import explode_hashes
 
-    exploded = explode_hashes(hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id")
-    return _term_cols(
-        exploded.withColumn("bucket", F.pmod(F.col("hash"), F.lit(DEFAULT_HASH_BUCKETS)))
-    )
+    return lsh_terms(explode_hashes(hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"))
 
 
 def _dirs(rows: list) -> tuple[set, set]:
@@ -147,7 +134,7 @@ def _live_rows(
     `hint` marks the id set for the anti-joins (F.broadcast for a
     request-sized batch)."""
     live_docs = docs.join(hint(ids_df), ID_FIELD, "left_anti")
-    live_terms = _term_cols(terms).join(
+    live_terms = lsh_terms(terms).join(
         hint(ids_df.select(F.col(ID_FIELD).alias("vec_id"))), "vec_id", "left_anti"
     )
     if hashed is not None:
@@ -331,21 +318,25 @@ class AknnHttpServer:
 
     def _coerce_ids(self, id_type: str, raw_ids: list) -> list:
         """Wire ids coerced to the pinned id type, the way the stored rows
-        carry them (a string-pinned index stores "5", not 5). An id that
-        cannot exist in the index — null, or non-numeric against a bigint
-        index — is dropped: it keeps the not-found contract (200 / zero
-        hits for a search, 404 for a GET or delete)."""
+        carry them (a string-pinned index stores "5", not 5). A bigint
+        index accepts a JSON int (not a bool), an integral float (5.0) or
+        a decimal-integer string ("5"). An id that cannot exist in the
+        index — null, a bool, a fractional float, any other string — is
+        dropped: it keeps the not-found contract (200 / zero hits for a
+        search, 404 for a GET or delete) instead of addressing another
+        doc (int(5.7) is 5, int(True) is 1)."""
         out = []
         for i in raw_ids:
             if i is None:
                 continue
             if id_type == "string":
                 out.append(str(i))
-                continue
-            try:
+            elif isinstance(i, int) and not isinstance(i, bool):
+                out.append(i)
+            elif isinstance(i, float) and i.is_integer():
                 out.append(int(i))
-            except (TypeError, ValueError):
-                pass
+            elif isinstance(i, str) and re.fullmatch(r"[+-]?[0-9]+", i):
+                out.append(int(i))
         return out
 
     def create(self, body: dict) -> dict:
@@ -589,13 +580,8 @@ class AknnHttpServer:
         stored under its vec_id name so load_lsh_partitions reads it back
         verbatim). Per-batch appends accumulate one file per touched
         directory per batch; POST /_aknn_compact rewrites them."""
-        from .sources.index_store import clustered
-
-        for path, df, cols in (
-            (self._docs_path(index), hashed, DOCS_PARTS),
-            (self._terms_path(index), _terms_of(hashed), TERMS_PARTS),
-        ):
-            clustered(df, *cols).write.mode("append").partitionBy(*cols).parquet(path)
+        write_clustered(hashed, self._docs_path(index), DOCS_PARTS, mode="append")
+        write_clustered(_terms_of(hashed), self._terms_path(index), TERMS_PARTS, mode="append")
 
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh

@@ -62,10 +62,8 @@ def _driver_jvm_opts(driver_mem: str) -> str:
 def get_spark(
     app_name: str = "elastik-nearest-neighbors-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cpus, 32)
     driver_mem = os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem())
     builder = SparkSession.builder.master(f"local[{cpus}]")
     jvm_opts = _driver_jvm_opts(driver_mem)
@@ -74,7 +72,6 @@ def get_spark(
     return configure(
         builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_mem)
         # r14: pip-installed Spark has no libhadoop, so the default
         # checksummed LocalFileSystem pays TWO chmod subprocess forks per

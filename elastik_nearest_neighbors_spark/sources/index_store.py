@@ -1,20 +1,29 @@
-"""Persisted index layout — the storage half of the 100 TB design.
+"""Persisted index layouts and the one path that maintains them.
 
 The reference keeps its index inside Elasticsearch (hash terms as keyword
-fields, pruned by ES's inverted index). The Spark-native equivalent is a
-parquet layout whose *directory partitioning* carries the pruning:
+fields, pruned by ES's inverted index) and maintains it through one
+indexing path. The Spark-native equivalent is a parquet layout whose
+*directory partitioning* carries the pruning:
 
-- LSH: exploded (vec_id, tbl, hash) written partitioned by
-  (tbl, bucket = pmod(hash, n_buckets)). A search that term-matches one
-  (tbl, hash) pair touches exactly one directory — the scan's
-  PartitionFilters prune everything else without reading a footer.
-- IVF: (vec_id, list_id) partitioned by list_id; probing nprobe of nlist
+- LSH: term rows (vec_id, tbl, hash) partitioned by
+  (tbl, bucket = pmod(hash, n_buckets)), built by `lsh_terms`. A search
+  that term-matches one (tbl, hash) pair touches exactly one directory —
+  the scan's PartitionFilters prune everything else without reading a
+  footer.
+- IVF and IVFPQ: rows partitioned by list_id; probing nprobe of nlist
   lists reads nprobe/nlist of the data.
+- Graph: edges partitioned by bucket = pmod(vec_a, n_buckets).
 
 `bucket` is a *directory-count cap*, not a hash table: at nlist/n_buckets
 directories the layout stays listable at 100 TB while still pruning ~1/n of
 the index per lookup. Hash equality is still checked in the scan filter —
 bucketing is lossless.
+
+Every operator and the HTTP server maintain their stores through this
+module: `write_clustered` is the one partitioned write (build, append,
+compaction, swap and patch), `build_once` is the one build-if-missing
+check, and `patch_once` is the one in-place patch (touched directories →
+pruned read → keep/union → `pruned_dynamic_overwrite` → marker).
 
 The loaders take plain predicates so Catalyst sees literal partition
 filters; tests assert the pruning shows up in the physical plan
@@ -23,10 +32,10 @@ filters; tests assert the pruning shows up in the physical plan
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import io
 
 DEFAULT_HASH_BUCKETS = 64
 
@@ -57,6 +66,44 @@ def clustered(df: DataFrame, *part_cols: str) -> DataFrame:
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
     )
     return df.repartition(n, *[F.col(c) for c in part_cols])
+
+
+def write_clustered(
+    df: DataFrame, path: str, part_cols: list[str], mode: str = "overwrite"
+) -> None:
+    """The one partitioned store write: `df` clustered by `part_cols`
+    (one file per directory per write, see `clustered`), then written
+    partitioned by them.
+
+    The clustering is load-bearing: without it every input task writes
+    its own file into EVERY directory it has rows for — tasks × T ×
+    n_buckets tiny files for an LSH store (measured 32k files / 60 s at
+    sf0.1, against an 8× faster clustered build). It is also exactly the
+    write-side shuffle a 100 TB deployment wants (each reducer owns whole
+    directories)."""
+    clustered(df, *part_cols).write.mode(mode).partitionBy(*part_cols).parquet(path)
+
+
+def lsh_terms(exploded: DataFrame) -> DataFrame:
+    """The stored LSH term row of an exploded (vec_id, tbl, hash) frame:
+    (vec_id, int tbl, hash, int bucket = pmod(hash, DEFAULT_HASH_BUCKETS)).
+    The one term layout shared by the batch build, the streaming appender,
+    the maintenance patches and the HTTP server's terms/ side."""
+    return exploded.select(
+        "vec_id",
+        F.col("tbl").cast("int").alias("tbl"),
+        "hash",
+        F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
+    )
+
+
+def build_once(spark: SparkSession, store: str, write) -> str:
+    """Run `write()` unless `store` already holds a committed write (its
+    `_SUCCESS` file) and return `store` — one persisted copy per store
+    directory, so repeat calls in a process reuse it instead of rebuilding."""
+    if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
+        write()
+    return store
 
 
 def _norm_keys(keys) -> list[tuple[int, ...]]:
@@ -94,22 +141,19 @@ def pruned_dynamic_overwrite(
     touched,
     assume_live: bool = False,
 ) -> None:
-    """The shared patch-in-place tail used by every index-maintenance op
-    (knn.index_upsert/index_delete, ivf.ivf_upsert/ivf_delete,
-    pq.ivfpq_upsert/ivfpq_delete, graph._purge_edges, server._purge_ids —
-    seven hand-synced copies before r12; this is the single implementation).
-
-    `patched` holds the surviving/replacement rows of ONLY the `touched`
-    directories (each key an int or tuple matching `part_cols`). Steps, each
-    load-bearing:
+    """Rewrite ONLY the `touched` directories of the store at `path` with
+    `patched`, their surviving and replacement rows (each key an int or
+    tuple matching `part_cols`). Called by `patch_once` for the operator
+    stores and by `server._replace_store` for both sides of a served
+    index. Steps, each load-bearing:
 
     1. localCheckpoint BEFORE the overwrite — `patched` reads the same
        parquet path it is about to rewrite; materializing it first (the
        delta's ≤ |touched| directories of rows, not the whole store) makes
        read-then-overwrite safe instead of racing the scan against the
        truncation.
-    2. Dynamic partition overwrite, clustered by the partition keys (one
-       file per rewritten directory), with the session's
+    2. Dynamic partition overwrite through `write_clustered` (one file
+       per rewritten directory), with the session's
        partitionOverwriteMode saved/restored around the write.
     3. Explicit delete of touched directories that received NO surviving
        rows — dynamic overwrite skips empty partitions, so their stale
@@ -120,8 +164,6 @@ def pruned_dynamic_overwrite(
        job on the point-update serving path (r12).
 
     At 100 TB the cost is O(touched directories), never O(store)."""
-    from .. import io
-
     patched = patched.localCheckpoint()
     live = None
     if not assume_live:
@@ -132,12 +174,7 @@ def pruned_dynamic_overwrite(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            clustered(patched, *part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+        write_clustered(patched, path, part_cols)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     if assume_live:
@@ -150,40 +187,54 @@ def pruned_dynamic_overwrite(
             )
 
 
-def save_lsh_index(exploded: DataFrame, path: str, n_buckets: int = DEFAULT_HASH_BUCKETS) -> None:
-    """Persist an exploded LSH index (vec_id, tbl, hash) partitioned by
-    (tbl, bucket).
+def patch_once(
+    spark: SparkSession,
+    store: str,
+    marker: str,
+    part_cols: list[str],
+    touched: DataFrame,
+    keep: Column,
+    new_rows: DataFrame | None = None,
+) -> None:
+    """The one in-place store patch, skipped once `marker` exists.
 
-    The repartition on the partition keys is load-bearing: without it every
-    input task writes its own file into EVERY directory it has rows for —
-    tasks × T × n_buckets tiny files (measured 32k files / 60s at sf0.1).
-    Clustering by (tbl, bucket) first gives one file per directory and an
-    8× faster build; it is also exactly the write-side shuffle a 100 TB
-    deployment wants (each reducer owns whole buckets)."""
-    (
-        clustered(
-            exploded.withColumn("bucket", F.pmod(F.col("hash"), F.lit(n_buckets))),
-            "tbl",
-            "bucket",
+    The distinct `part_cols` keys of `touched` name the directories to
+    rewrite (the caller's choice: old ∪ new rows for an upsert, the doomed
+    rows for a delete). Their stored rows where `keep` holds, plus
+    `new_rows`, replace them through `pruned_dynamic_overwrite`; the
+    packed-key read (`partition_key_filter`) stays a PartitionFilter.
+    `marker` is written last, so a crash anywhere before it re-runs the
+    whole patch on the next call — and every caller's keep/new_rows pair
+    is idempotent, so the re-run lands on the uninterrupted answer."""
+    if io.fs_exists(spark, marker):
+        return
+    keys = [tuple(r) for r in touched.select(*part_cols).distinct().collect()]
+    if keys:
+        patched = (
+            io.read_parquet(spark, store)
+            .where(partition_key_filter(part_cols, keys))
+            .where(keep)
         )
-        .write.mode("overwrite")
-        .partitionBy("tbl", "bucket")
-        .parquet(path)
-    )
+        if new_rows is not None:
+            patched = patched.unionByName(new_rows)
+        pruned_dynamic_overwrite(spark, store, patched, part_cols, keys)
+    io.fs_touch(spark, marker)
 
 
-def load_lsh_bucket(
-    spark: SparkSession, path: str, tbl: int, hash_val: int, n_buckets: int = DEFAULT_HASH_BUCKETS
-) -> DataFrame:
+def save_lsh_index(exploded: DataFrame, path: str) -> None:
+    """Persist an exploded LSH index (vec_id, tbl, hash) as `lsh_terms`
+    rows partitioned by (tbl, bucket)."""
+    write_clustered(lsh_terms(exploded), path, ["tbl", "bucket"])
+
+
+def load_lsh_bucket(spark: SparkSession, path: str, tbl: int, hash_val: int) -> DataFrame:
     """Candidates for one (tbl, hash) term — partition-pruned to a single
     (tbl, bucket) directory, then exact hash-matched inside it."""
-    from .. import io
-
     return (
         io.read_parquet(spark, path)
         .where(
             (F.col("tbl") == tbl)
-            & (F.col("bucket") == hash_val % n_buckets)
+            & (F.col("bucket") == hash_val % DEFAULT_HASH_BUCKETS)
             & (F.col("hash") == hash_val)
         )
         .select("vec_id", "tbl", "hash")
@@ -208,8 +259,6 @@ def load_lsh_partitions(
     IN builds in <0.9 s and the scan/action cost is unchanged. `parts` is
     ≤ Q·T entries for a query batch — KB-sized, like the IVF probe list."""
     pred = partition_key_filter(["tbl", "bucket"], parts)
-    from .. import io
-
     dirs = [io.fs_join(path, f"tbl={int(t)}", f"bucket={int(b)}") for t, b in parts]
     # a probed bucket may simply have no indexed rows → no directory; at
     # scale this existence check reads the write manifest, not the fs
@@ -220,22 +269,6 @@ def load_lsh_partitions(
         io.read_parquet(spark, path, base=path, dirs=dirs)
         .where(pred)
         .select("vec_id", "tbl", "hash")
-    )
-
-
-def compact_lsh_store(spark: SparkSession, src_path: str, dst_path: str) -> None:
-    """Rewrite a (possibly many-small-files) LSH store into the canonical
-    one-file-per-(tbl, bucket)-directory layout. Streaming appends create
-    one file per touched directory per micro-batch; at 100 TB the per-file
-    open/footer overhead of that accumulation dominates pruned reads long
-    before the bytes do. Same clustered write as save_lsh_index, so the
-    compacted store is content- and layout-identical to a batch-built one."""
-    df = spark.read.parquet(src_path)  # tbl/bucket come back as partition cols
-    (
-        clustered(df, "tbl", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("tbl", "bucket")
-        .parquet(dst_path)
     )
 
 
@@ -250,40 +283,28 @@ def clustered_overwrite_swap(
     hence the sibling + swap; the CALLER runs this under its torn-write
     marker so a crash between drop and rename is a detected 503, not
     silent data loss."""
-    from .. import io
-
     tmp = path.rstrip("/") + ".new"
-    (
-        clustered(df, *part_cols)
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(tmp)
-    )
+    write_clustered(df, tmp, part_cols)
     io.fs_delete(spark, path)
     io.fs_rename(spark, tmp, path)
 
 
 def compact_in_place(spark: SparkSession, path: str, part_cols: list[str]) -> None:
-    """compact_lsh_store's clustered rewrite for a live store directory
-    (r13, the wire-compaction item): same content, same partition values,
-    one file per directory."""
+    """Compaction of a live store directory (r13, the wire-compaction
+    item): the same clustered rewrite as a batch build — same content,
+    same partition values, one file per directory."""
     clustered_overwrite_swap(spark, path, spark.read.parquet(path), part_cols)
 
 
 def save_ivf_index(assigned: DataFrame, path: str) -> None:
     """Persist an IVF index (vec_id, list_id, center_dist) partitioned by
-    list_id. Clustered by list_id before the write for one file per list
-    directory (see save_lsh_index)."""
-    clustered(assigned, "list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(path)
+    list_id, one file per list directory."""
+    write_clustered(assigned, path, ["list_id"])
 
 
 def load_ivf_lists(spark: SparkSession, path: str, list_ids: list[int]) -> DataFrame:
     """Vectors in the probed lists — scan prunes to len(list_ids) of nlist
     directories."""
-    from .. import io
-
     return io.read_parquet(spark, path).where(F.col("list_id").isin(list_ids))
 
 
@@ -296,13 +317,10 @@ def save_graph_edges(edges: DataFrame, path: str, n_buckets: int = GRAPH_EDGE_BU
     as the LSH store: a query batch's hop expansion touches only the
     buckets its seed ids land in, and hop lookups stay lossless because
     vec_a equality is still checked in the scan filter."""
-    (
-        clustered(
-            edges.withColumn("bucket", F.pmod(F.col("vec_a"), F.lit(n_buckets))), "bucket"
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
+    write_clustered(
+        edges.withColumn("bucket", F.pmod(F.col("vec_a"), F.lit(n_buckets))),
+        path,
+        ["bucket"],
     )
 
 
@@ -311,8 +329,6 @@ def load_graph_buckets(
 ) -> DataFrame:
     """Edges in the seeds' buckets — scan prunes to len(buckets) of
     n_buckets directories (literal PartitionFilters)."""
-    from .. import io
-
     return (
         io.read_parquet(spark, path)
         .where(F.col("bucket").isin(buckets))

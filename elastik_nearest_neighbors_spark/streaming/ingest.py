@@ -30,6 +30,7 @@ from .. import io
 from ..constants import DEC
 from ..operators.lsh import build_index
 from ..session import configure
+from ..sources.index_store import build_once, lsh_terms, write_clustered
 
 
 def _event_time(df: DataFrame) -> DataFrame:
@@ -49,9 +50,11 @@ def _split_source(batch: DataFrame, out: str, n: int = STREAM_SPLIT_FILES) -> st
     """Write `batch` once as n parquet files under `out`/src and return the
     path — the stand-in for a directory that accumulated n ingest drops."""
     src_dir = f"{out}/src"
-    if not io.fs_exists(batch.sparkSession, io.fs_join(src_dir, "_SUCCESS")):
-        batch.repartition(n).write.mode("overwrite").parquet(src_dir)
-    return src_dir
+    return build_once(
+        batch.sparkSession,
+        src_dir,
+        lambda: batch.repartition(n).write.mode("overwrite").parquet(src_dir),
+    )
 
 
 def _drain(q, timeout: int = 300) -> None:
@@ -138,7 +141,6 @@ def _ensure_stream_store(spark: SparkSession, sf_dir: str) -> str:
     contract the oracle then certifies content-wise."""
     from ..operators.lsh import explode_hashes
     from ..oracles_vector import lsh_model_for
-    from ..sources.index_store import DEFAULT_HASH_BUCKETS
 
     configure(spark)
     batch = io.table(spark, sf_dir, "embeddings")
@@ -151,25 +153,13 @@ def _ensure_stream_store(spark: SparkSession, sf_dir: str) -> str:
         .parquet(_split_source(batch, out))
     )
     hashed = build_index(src, model).select("vec_id", "hashes")
-    exploded = explode_hashes(hashed, "vec_id", "vec_id").select(
-        "vec_id",
-        F.col("tbl").cast("int").alias("tbl"),
-        "hash",
-        F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-    )
+    terms = lsh_terms(explode_hashes(hashed, "vec_id", "vec_id"))
 
     def _append(bdf: DataFrame, _bid: int) -> None:
-        from ..sources.index_store import clustered
-
-        (
-            clustered(bdf, "tbl", "bucket")
-            .write.mode("append")
-            .partitionBy("tbl", "bucket")
-            .parquet(store)
-        )
+        write_clustered(bdf, store, ["tbl", "bucket"], mode="append")
 
     q = (
-        exploded.writeStream.foreachBatch(_append)
+        terms.writeStream.foreachBatch(_append)
         .option("checkpointLocation", f"{out}/ckpt")
         .trigger(availableNow=True)
         .start()
@@ -203,13 +193,15 @@ def streaming_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is this entry's oracle. tests assert the one-file-per-directory
     invariant."""
     from ..operators.knn import search_lsh_store
-    from ..sources.index_store import compact_lsh_store
 
     store = _ensure_stream_store(spark, sf_dir)
-    cout = io.scratch_dir("lsh_stream_store_compact", sf_dir)
-    compacted = f"{cout}/data"
-    if not io.fs_exists(spark, io.fs_join(compacted, "_SUCCESS")):
-        compact_lsh_store(spark, store, compacted)
+    compacted = f"{io.scratch_dir('lsh_stream_store_compact', sf_dir)}/data"
+    # tbl/bucket come back as partition columns of the appended store
+    build_once(
+        spark,
+        compacted,
+        lambda: write_clustered(spark.read.parquet(store), compacted, ["tbl", "bucket"]),
+    )
     return search_lsh_store(spark, sf_dir, compacted)
 
 

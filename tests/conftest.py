@@ -10,6 +10,6 @@ SF_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="enn-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="enn-tests", cpus=8)
     yield s
     s.stop()

@@ -28,6 +28,11 @@ GATE_WINDOW_SIZE = 50
 # operators r14 left untouched (sq8 trio, boilerplate_scrub, matryoshka,
 # decontaminate, seq_pack, source_cap, stratified_sample,
 # ann_recall_graph_beam, bm25_doc_search_char, phrase_match).
+# Later rotations: source_stats promoted when aknn_http_search left the
+# registry; streaming_index_store (its append moved onto
+# index_store.write_clustered/lsh_terms) and ann_recall_graph_beam (the
+# r14-verdict re-gate) promoted, bm25_doc_search and hybrid_search_rrf
+# (search.py unchanged) displaced.
 EXPECTED_GATE_WINDOW = [
     "aknn_http_search_store",
     "aknn_http_upsert",
@@ -35,6 +40,7 @@ EXPECTED_GATE_WINDOW = [
     "aknn_http_bulk_ingest",
     "aknn_http_doc_get",
     "streaming_index_compact",
+    "streaming_index_store",
     "index_upsert",
     "index_delete",
     "ann_search_lsh_store",
@@ -74,10 +80,9 @@ EXPECTED_GATE_WINDOW = [
     "ann_recall_ivfpq_refined",
     "ann_search_graph",
     "ann_search_graph_beam",
+    "ann_recall_graph_beam",
     "ann_recall_graph_sweep",
     "knn_graph_multiprobe",
-    "bm25_doc_search",
-    "hybrid_search_rrf",
     # the head of the rotation queue, promoted when the flat-layout
     # serving key aknn_http_search left the registry
     "source_stats",

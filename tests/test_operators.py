@@ -1684,6 +1684,69 @@ def test_ivfpq_delete_through_uri_store(spark):
     shutil.rmtree(base_local, ignore_errors=True)
 
 
+@pytest.mark.parametrize(
+    "op, kind",
+    [
+        ("index_upsert", "lsh_upsert"),
+        ("index_delete", "lsh_delete"),
+        ("ivf_upsert", "ivf_upsert"),
+        ("ivf_delete", "ivf_delete"),
+        ("ivfpq_upsert", "ivfpq_upsert"),
+        ("ivfpq_delete", "ivfpq_delete"),
+        ("graph_delete", "graph_delete"),
+    ],
+)
+def test_maintenance_crash_before_marker_reruns_to_uninterrupted(spark, monkeypatch, op, kind):
+    """A store patch interrupted after its pruned overwrite and before its
+    marker (io.fs_touch raises once) re-runs on the next call — over the
+    already-patched store — and answers exactly like an uninterrupted run
+    in a fresh scratch dir."""
+    import shutil
+
+    from elastik_nearest_neighbors_spark import registry
+    from elastik_nearest_neighbors_spark.sources import index_store
+
+    fn = registry.queries()[op]
+    key = (kind, SF_SMALL)
+    saved = io._TMP_DIRS.pop(key, None)
+    overwrites: list = []
+    fired: list = []
+    real_overwrite, real_touch = index_store.pruned_dynamic_overwrite, io.fs_touch
+
+    def counting_overwrite(*args, **kwargs):
+        overwrites.append(args[1])
+        return real_overwrite(*args, **kwargs)
+
+    def crash_once(spark_, path):
+        if not fired:
+            fired.append((path, len(overwrites)))
+            raise RuntimeError("injected crash before the marker")
+        return real_touch(spark_, path)
+
+    cols = lambda df: df[sorted(df.columns)].sort_values(sorted(df.columns)).reset_index(drop=True)
+    dirs = []
+    try:
+        monkeypatch.setattr(index_store, "pruned_dynamic_overwrite", counting_overwrite)
+        monkeypatch.setattr(io, "fs_touch", crash_once)
+        dirs.append(io.scratch_dir(kind, SF_SMALL))
+        with pytest.raises(RuntimeError, match="injected crash"):
+            fn(spark, SF_SMALL)
+        assert len(fired) == 1 and fired[0][1] == 1, (fired, overwrites)
+        assert not io.fs_exists(spark, fired[0][0])
+        rerun = cols(fn(spark, SF_SMALL).toPandas())
+        assert io.fs_exists(spark, fired[0][0])
+        io._TMP_DIRS.pop(key)
+        dirs.append(io.scratch_dir(kind, SF_SMALL))
+        fresh = cols(fn(spark, SF_SMALL).toPandas())
+    finally:
+        io._TMP_DIRS.pop(key, None)
+        if saved is not None:
+            io._TMP_DIRS[key] = saved
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+    assert len(rerun) > 0 and rerun.equals(fresh), (op, len(rerun), len(fresh))
+
+
 def test_aknn_http_server_endpoints(spark):
     """r10 (#156): the wire layer itself — create/index/search/models over
     a real localhost socket, plus the error contract (404 unknown path,

@@ -790,6 +790,27 @@ def test_http_ids_coerced_to_pinned_type(spark):
         srv.stop()
 
 
+def test_http_non_integral_ids_not_found_on_bigint_index(spark):
+    """On a bigint index a fractional float or a bool id cannot name a
+    stored doc: `{"ids": [5.7]}` must not delete doc 5 (int(5.7) is 5) and
+    `{"ids": [true]}` must not answer for doc 1 (int(True) is 1). Both take
+    the not-found path, while "5" and 5.0 still address doc 5."""
+    docs = _sample_docs(spark, n=32)
+    assert {1, 5} <= {d["_id"] for d in docs}
+    srv = _serve(spark, docs)
+    try:
+        out = _http_post(srv.port, "/_aknn_delete", {"_index": "idx", "ids": [5.7]})
+        assert out["deleted"] == 0, out
+        assert _http_get(srv.port, "/idx/5")["_id"] == 5
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": [True], "k1": 50, "k2": 5})
+        assert out["responses"][0]["hits"]["total"] == 0, out
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": ["5", 5.0], "k1": 50, "k2": 5})
+        want = _http_get(srv.port, "/idx/5/_aknn_search?k1=50&k2=5")
+        assert out["responses"] == [want, want] and want["hits"]["total"] == 5, out
+    finally:
+        srv.stop()
+
+
 def test_http_crash_mid_patch_is_503_and_drop_reindex_recovers(spark, monkeypatch):
     """Crash injection into the one patch path: the second pruned dynamic
     overwrite (docs/, after terms/ committed) raises, once inside a

@@ -58,7 +58,7 @@ def main() -> None:
     from elastik_nearest_neighbors_spark.session import get_spark
     from elastik_nearest_neighbors_spark.sources.index_store import save_ivf_index
 
-    spark = get_spark(app_name="enn-clustered-purge", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="enn-clustered-purge", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     emb = io.table(spark, sf_dir, "embeddings", widen=True)
 

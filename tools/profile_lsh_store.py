@@ -38,7 +38,7 @@ def t(label, fn, n=3):
 
 
 def main():
-    spark = get_spark(app_name="profile-lsh-store", cpus=CPUS, shuffle_partitions=max(CPUS, 32))
+    spark = get_spark(app_name="profile-lsh-store", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql.functions import pandas_udf
 

@@ -63,7 +63,7 @@ def main() -> None:
     )
     from elastik_nearest_neighbors_spark.session import get_spark
 
-    spark = get_spark(app_name="enn-wire-bulk", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="enn-wire-bulk", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     emb = io.table(spark, sf_dir, "embeddings", widen=True)
     docs = [
